@@ -123,6 +123,15 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
     is recomputed as the component-minimum URL after decoding, so outputs
     match the string path exactly.
     """
+    return _components(edges, max_iterations, driver_threshold,
+                       encode_ids)[0]
+
+
+def _components(edges: DataFrame, max_iterations: int = 30,
+                driver_threshold: int = 200_000,
+                encode_ids: bool = True) -> tuple[DataFrame, bool]:
+    """connected_components, plus whether the assignment was built on the
+    driver (and so is bounded by driver_threshold)."""
     e = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
          .where(F.col("u") != F.col("v")).distinct())
     spark = edges.sparkSession
@@ -131,7 +140,8 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
         # (if present) sends us down the distributed path
         sample = e.limit(driver_threshold + 1).collect()
         if not sample:
-            return spark.createDataFrame([], "url string, cluster_id string")
+            return (spark.createDataFrame([], "url string, cluster_id string"),
+                    True)
         if len(sample) <= driver_threshold:
             parent: dict[str, str] = {}
 
@@ -147,17 +157,11 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
             assign = [(v, find(v)) for v in parent]
-            # broadcast hint: the assignment is bounded by
-            # driver_threshold BY CONSTRUCTION (it came off the driver),
-            # but it surfaces as a Python-RDD scan with unknown stats,
-            # which otherwise forces a sort-merge anti-join that shuffles
-            # and sorts the whole corpus key column in assign_clusters
-            # (observed in the r6 p4 plan; guide §3.1: broadcast the side
-            # you KNOW is small)
-            return F.broadcast(spark.createDataFrame(
-                assign, "url string, cluster_id string"))
+            return (spark.createDataFrame(
+                assign, "url string, cluster_id string"), True)
     if e.isEmpty():
-        return spark.createDataFrame([], "url string, cluster_id string")
+        return (spark.createDataFrame([], "url string, cluster_id string"),
+                False)
 
     d = _encode_vertices(e) if encode_ids else None
     if d is not None:
@@ -173,14 +177,14 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
         labeled = assign_int.join(
             d.withColumnRenamed("vid", "u"), "u").select("url", "v")
         reps = labeled.groupBy("v").agg(F.min("url").alias("cluster_id"))
-        return labeled.join(reps, "v").select("url", "cluster_id")
+        return labeled.join(reps, "v").select("url", "cluster_id"), False
 
     e = _propagate(e, max_iterations)
     # converged state: every edge points child -> component root
     children = e.select(F.col("u").alias("url"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("url"),
                      F.col("v").alias("cluster_id")).distinct()
-    return children.unionByName(roots).distinct()
+    return children.unionByName(roots).distinct(), False
 
 
 def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
@@ -234,10 +238,18 @@ def assign_clusters(corpus_keys: DataFrame, edges: DataFrame,
                     max_iterations: int = 30) -> DataFrame:
     """All documents -> (url, cluster_id); documents with no duplicate edge
     form singleton clusters keyed by their own url."""
-    comp = connected_components(edges, max_iterations)
+    comp, on_driver = _components(edges, max_iterations)
+    # a driver-built assignment is bounded by driver_threshold BY
+    # CONSTRUCTION, but it surfaces as a Python-RDD scan with unknown
+    # stats, which otherwise forces a sort-merge anti-join that shuffles
+    # and sorts the whole corpus key column. The hint sits on the join
+    # side only: on a frame that is also unioned it is not part of a join
+    # relation, and Spark logs a warning for it.
+    members = comp.select("url")
     singletons = (
         corpus_keys.select("url")
-        .join(comp.select("url"), "url", "left_anti")
+        .join(F.broadcast(members) if on_driver else members, "url",
+              "left_anti")
         .select("url", F.col("url").alias("cluster_id"))
     )
     return comp.unionByName(singletons)

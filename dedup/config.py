@@ -102,19 +102,16 @@ class DedupConfig:
         return hashlib.md5(payload.encode()).hexdigest()
 
 
-def minhash_prefilter_min_equal(cfg: DedupConfig,
-                                threshold: float | None = None) -> int:
+def minhash_prefilter_min_equal(cfg: DedupConfig) -> int:
     """Jaccard-mode prefilter cut as an INTEGER component count (exact on
     both the Spark and oracle sides — no float comparison): a pair survives
     iff at least this many of its num_hashes MinHash components are equal.
-    Pass `threshold` when the caller applies an explicit keep threshold
-    different from cfg.jaccard_threshold (e.g. dedupe_metadata's
-    threshold=0.0 'keep everything' contract — the cut is then 0 and the
-    prefilter is a no-op, never hiding candidates the caller would keep)."""
+    The cut follows cfg.jaccard_threshold, so a caller keeping everything
+    (jaccard_threshold=0.0) gets a cut of 0 and the prefilter hides no
+    candidate it would keep."""
     import math
 
-    t = cfg.jaccard_threshold if threshold is None else threshold
-    cut = max(0.0, t - cfg.jaccard_prefilter_margin)
+    cut = max(0.0, cfg.jaccard_threshold - cfg.jaccard_prefilter_margin)
     return int(math.ceil(cut * cfg.num_hashes))
 
 

@@ -24,14 +24,20 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import DoubleType
 
 from dedup.coeffs import load_coeffs
-from dedup.config import DedupConfig
-from dedup.normalize import is_valid_field, normalize_url
-from dedup.signature import compute_text_signature
-from dedup.verify import cosine_similarity
+from dedup.config import DedupConfig, minhash_prefilter_min_equal
+from dedup.local_oracle import xxh64_band_key
+from dedup.lsh import key_rank_col, match_source_from_rank, unified_group_keys
+from dedup.normalize import (description_block_key, is_valid_field,
+                             normalize_url, title_block_keys)
+from dedup.signature import _shingle_array, compute_text_signature, tokenize
+from dedup.verify import (MIXED_SHINGLES_ERROR, _cosines_from_matrices,
+                          _list_array_matrix, batch_jaccards,
+                          cosine_similarity)
 
 # candidate DataFrame contract: one row per (search_field, candidate) in
 # request order. field_priority = index of the field in the request's
@@ -215,165 +221,110 @@ def find_duplicates(source: SourceMetadata, candidates: DataFrame,
     return duplicates, field_max
 
 
-def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
-                    cfg: DedupConfig | None = None,
-                    threshold: float | None = None,
-                    key_index: DataFrame | None = None,
-                    scoring: str | None = None) -> DataFrame:
-    """Ad-hoc by-metadata query at corpus scale — the reference's
-    `/detect/hash/by-metadata` (app/main.py:534-613): the source document is
-    NOT in the corpus; its signature and blocking keys are computed
-    driver-side from the given title/description/url (T9a semantics:
-    valid fields only), candidates come from the same band-key/url-key
-    semi-join as `dedupe_one`, and scoring is the reference cosine against
-    the broadcast source signature.
+_LOOKUP_SCHEMA = "node_url string, similarity double, match_source string"
 
-    Returns (node_url, similarity, match_source) like `dedupe_one`.
 
-    `scoring` mirrors dedupe_one: None/"cosine" (default) keeps the
-    reference cosine decision; "jaccard" scores candidates by exact
-    Jaccard of their shingle arrays against the source's shingle set
-    (computed driver-side) and thresholds on cfg.jaccard_threshold —
-    the similarity column then carries the Jaccard."""
-    from dedup.local_oracle import xxh64_band_key
-    from dedup.lsh import unified_group_keys
-    from dedup.normalize import description_block_key, title_block_keys
-    from dedup.signature import _shingle_array, tokenize
-    from dedup.verify import cosine_similarity
+def _txt_keys(title_keys, desc_key: str | None) -> list[str]:
+    """Metadata blocking keys in the unified key table's gk_txt form."""
+    keys = [f"t:{k}" for k in title_keys]
+    if desc_key is not None:
+        keys.append(f"d:{desc_key}")
+    return keys
 
-    cfg = cfg or DedupConfig()
+
+def _source_score_udf(src: np.ndarray, use_jaccard: bool):
+    """Arrow UDF (vectors, signed) -> each candidate's score against the
+    driver-held source vector `src`, through the same batched kernels as
+    verify_pairs: reference cosine over minhash vectors, or exact Jaccard
+    over shingle sets. Rows without a vector score NULL; a signed row
+    without one means a mixed signatures table and raises."""
+    def _score(vecs, signed):
+        has = np.asarray(vecs.is_valid())
+        if (np.asarray(signed) & ~has).any():
+            raise ValueError(MIXED_SHINGLES_ERROR.format(""))
+        out = np.full(len(vecs), np.nan)
+        cand = vecs.drop_null()
+        n = len(cand)
+        if n and use_jaccard:
+            # one source copy per candidate: the prefilter passes only
+            # near-duplicates, so this stays within ~2x the batch's input
+            rep = pa.LargeListArray.from_arrays(
+                pa.array(np.arange(n + 1, dtype=np.int64) * src.size),
+                pa.array(np.tile(src, n)))
+            out[has] = batch_jaccards(cand, rep)
+        elif n:
+            out[has] = _cosines_from_matrices(
+                np.broadcast_to(src, (n, src.size)), _list_array_matrix(cand))
+        return pa.array(out, from_pandas=True)  # NaN -> NULL
+
+    # real type objects: `from __future__ import annotations` would
+    # stringify inline hints, which arrow_udf's inference rejects
+    _score.__annotations__ = {
+        "vecs": pa.Array, "signed": pa.Array, "return": pa.Array}
+    return F.arrow_udf(_score, "double").asNondeterministic()
+
+
+def _score_lookup(signatures: DataFrame, cfg: DedupConfig,
+                  key_index: DataFrame | None, scoring: str | None,
+                  src_sig, src_shingles, url_keys: list[str],
+                  txt_keys: list[str], exclude: str | None = None
+                  ) -> DataFrame:
+    """Shared tail of dedupe_one and dedupe_metadata, the engine twin of
+    local_oracle._score_candidates: candidates share any blocking key with
+    the source (band keys derived here from src_sig, plus the url and
+    metadata keys) and carry their best key rank. url_exact short-circuits
+    to 1.0; the rest are scored against the driver-held source vectors —
+    cosine >= cfg.threshold, or with scoring="jaccard" exact Jaccard >=
+    cfg.jaccard_threshold — rounded to 4 dp, in (-sim, url) order."""
     use_jaccard = scoring == "jaccard"
-    if use_jaccard:
-        _require_shingles(signatures)
-    # an explicit threshold of 0.0 means "keep everything" here (engine
-    # API); only the parity kernel find_duplicates replicates the
-    # reference's `threshold or default` quirk (app/hash_detector.py:187)
-    if threshold is None:
-        threshold = cfg.jaccard_threshold if use_jaccard else cfg.threshold
-    spark = signatures.sparkSession
-
-    has_title = is_valid_field(source.title)
-    has_description = is_valid_field(source.description)
-    parts = ([source.title] if has_title else []) + \
-        ([source.description] if has_description else [])
-    A, B = load_coeffs(cfg.num_hashes, cfg.seed)
-    src_sig = compute_text_signature(" ".join(parts), A, B, cfg)
-    src_norms = {n for n in (normalize_url(source.url),
-                             normalize_url(source.redirect_url)
-                             if source.redirect_url else None) if n}
-    # metadata blocking keys (reference title / description-prefix
-    # candidate searches, app/wlo_client.py:265-311) — only useful when the
-    # corpus signatures carry the matching key columns
-    txt_keys: list[str] = []
-    if "title_keys" in signatures.columns:
-        txt_keys = [f"t:{k}" for k in title_block_keys(source.title)]
-        d = description_block_key(source.description)
-        if d is not None:
-            txt_keys.append(f"d:{d}")
-    if src_sig is None and not src_norms and not txt_keys:
-        return spark.createDataFrame(
-            [], "node_url string, similarity double, match_source string")
-
     band_keys: list[int] = []
     if src_sig is not None:
-        b, r = cfg.lsh_bands, cfg.lsh_rows
+        r = cfg.lsh_rows
         band_keys = [xxh64_band_key(i, src_sig[i * r:(i + 1) * r])
-                     for i in range(b)]
-    from dedup.lsh import key_rank_col, match_source_from_rank
+                     for i in range(cfg.lsh_bands)]
+    if not (band_keys or url_keys or txt_keys):
+        return signatures.sparkSession.createDataFrame([], _LOOKUP_SCHEMA)
+
     keys = (key_index if key_index is not None
             else unified_group_keys(signatures, cfg))
-    cands = (keys
-             .where(F.col("gk_band").isin(band_keys)
-                    | F.col("gk_url").isin(sorted(src_norms))
-                    | F.col("gk_txt").isin(txt_keys))
-             .groupBy("url")
-             .agg(F.min(key_rank_col()).alias("_rank")))
+    cands = keys.where(F.col("gk_band").isin(band_keys)
+                       | F.col("gk_url").isin(url_keys)
+                       | F.col("gk_txt").isin(txt_keys))
+    if exclude is not None:
+        cands = cands.where(F.col("url") != exclude)
+    cands = cands.groupBy("url").agg(F.min(key_rank_col()).alias("_rank"))
+    vec = "shingles" if use_jaccard else "minhash"
+    sig_cols = ["url", "minhash"] + (["shingles"] if use_jaccard else [])
+    joined = cands.join(signatures.select(*sig_cols), "url")
+    rank0 = F.col("_rank") == 0
 
-    src_sig_f64 = (src_sig.astype(np.float64)
-                   if src_sig is not None else None)
-
-    @F.pandas_udf(DoubleType())
-    def cos_udf(minhashes: pd.Series) -> pd.Series:
-        out = []
-        for mh in minhashes:
-            if mh is None or src_sig_f64 is None:
-                out.append(None)
-            else:
-                out.append(cosine_similarity(
-                    src_sig_f64, np.asarray(mh, dtype=np.float64)))
-        return pd.Series(out, dtype="float64")
-
-    if use_jaccard:
-        # same shingling as signatures_table (signature._shingle_array) so
-        # the driver-side source set can't drift from the stored arrays;
-        # values are < 2^32 so the int64 view is lossless
-        words = tokenize(" ".join(parts))
-        src_sh = (np.sort(_shingle_array(words, cfg).astype(np.int64))
-                  if words else np.empty(0, dtype=np.int64))
-
-        @F.pandas_udf(DoubleType())
-        def jac_udf(shingle_arrays: pd.Series,
-                    minhashes: pd.Series) -> pd.Series:
-            out = []
-            for sh, mh in zip(shingle_arrays, minhashes):
-                if sh is None:
-                    if mh is not None:
-                        # signed row without shingles = mixed signatures
-                        # table (ADVICE: the guard's single-row probe can
-                        # miss these) — fail loudly, a silent None here
-                        # masquerades as 'no duplicates'
-                        raise ValueError(
-                            "scoring='jaccard' hit a signed candidate "
-                            "with NULL shingles — the signatures table "
-                            "mixes keep_shingles=False rows; rebuild it "
-                            "under one engine config")
-                    out.append(None)
-                    continue
-                if src_sh.size == 0:
-                    out.append(None)
-                    continue
-                # stored shingles are int32 bit patterns of uint32 hashes
-                cand = np.asarray(sh, dtype=np.int64) & 0xFFFFFFFF
-                idx = np.searchsorted(src_sh, cand)
-                np.minimum(idx, src_sh.size - 1, out=idx)
-                inter = int(np.count_nonzero(src_sh[idx] == cand))
-                union = cand.size + src_sh.size - inter
-                out.append(inter / union if union else 0.0)
-            return pd.Series(out, dtype="float64")
-
-        joined = cands.join(
-            signatures.select("url", "shingles", "minhash"), "url")
-        if src_sig is not None:
-            # MinHash-estimate prefilter against the broadcast source
-            # signature — the same native equal-component cut verify_pairs
-            # applies BEFORE the shingle join, so the two per-document CLI
-            # modes share one keep machinery and by-metadata stops paying
-            # the full shingle-join cost the prefilter was built to avoid.
-            # Rank-0 (url_exact) candidates bypass scoring and the cut;
-            # the cut derives from the CALLER'S effective threshold, so an
-            # explicit low threshold (0.0 = 'keep everything') relaxes the
-            # prefilter with it instead of silently hiding candidates.
-            from dedup.config import minhash_prefilter_min_equal
-            min_eq = minhash_prefilter_min_equal(cfg, threshold=threshold)
-            src_arr = F.array(*[F.lit(float(x)) for x in src_sig])
-            est = F.size(F.filter(
-                F.zip_with(F.col("minhash"), src_arr,
-                           lambda x, y: x == y), lambda v: v))
-            # NULL-shingle rows bypass the cut so they always reach
-            # jac_udf's mixed-table ValueError — otherwise a slim row
-            # whose estimate falls below min_eq would be dropped silently,
-            # the exact failure the guard exists to make loud
+    score = F.lit(None).cast("double")  # no source signature: url_exact only
+    if src_sig is not None:
+        src = np.asarray(src_sig, dtype=np.float64)
+        if use_jaccard:
+            if src_shingles is None:
+                raise ValueError(
+                    MIXED_SHINGLES_ERROR.format(" (the source)"))
+            src = np.asarray(src_shingles, dtype=np.int64) & 0xFFFFFFFF
+            # MinHash-estimate prefilter against the source signature —
+            # the same native equal-component cut verify_pairs applies, so
+            # most candidates never send their shingles to Python. NULL-
+            # shingle rows bypass the cut so they always reach the scorer's
+            # mixed-table ValueError instead of being dropped silently.
+            src_arr = F.array(*[F.lit(int(x)) for x in src_sig])
+            est = F.size(F.filter(F.zip_with("minhash", src_arr,
+                                             lambda x, y: x == y),
+                                  lambda v: v))
             joined = joined.where(
-                (F.col("_rank") == 0) | F.col("shingles").isNull()
-                | (est >= F.lit(min_eq)))
-        score_expr = jac_udf("shingles", "minhash")
-    else:
-        joined = cands.join(signatures.select("url", "minhash"), "url")
-        score_expr = cos_udf("minhash")
+                rank0 | F.col("shingles").isNull()
+                | (est >= F.lit(minhash_prefilter_min_equal(cfg))))
+        score = _source_score_udf(src, use_jaccard)(
+            vec, F.col("minhash").isNotNull())
+
+    threshold = cfg.jaccard_threshold if use_jaccard else cfg.threshold
     scored = joined.select(
         F.col("url").alias("node_url"),
-        F.when(F.col("_rank") == 0, F.lit(1.0))
-        .otherwise(score_expr).alias("similarity"),
+        F.when(rank0, F.lit(1.0)).otherwise(score).alias("similarity"),
         match_source_from_rank(F.col("_rank")).alias("match_source"))
     return (scored
             .where(F.col("similarity").isNotNull())
@@ -382,6 +333,54 @@ def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
             .select("node_url", F.round("similarity", 4).alias("similarity"),
                     "match_source")
             .orderBy(F.desc("similarity"), F.asc("node_url")))
+
+
+def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
+                    cfg: DedupConfig | None = None,
+                    key_index: DataFrame | None = None,
+                    scoring: str | None = None) -> DataFrame:
+    """Ad-hoc by-metadata query at corpus scale — the reference's
+    `/detect/hash/by-metadata` (app/main.py:534-613): the source document is
+    NOT in the corpus; its signature and blocking keys are computed
+    driver-side from the given title/description/url (T9a semantics:
+    valid fields only), candidates come from the same band-key/url-key
+    semi-join as `dedupe_one`, and scoring is the reference cosine against
+    the source signature (`_score_lookup`).
+
+    Returns (node_url, similarity, match_source) like `dedupe_one`.
+
+    `scoring` mirrors dedupe_one: None/"cosine" (default) keeps the
+    reference cosine decision at cfg.threshold; "jaccard" scores candidates
+    by exact Jaccard of their shingle arrays against the source's shingle
+    set (computed driver-side) at cfg.jaccard_threshold — the similarity
+    column then carries the Jaccard. A threshold of 0.0 keeps every scored
+    candidate; only the parity kernel find_duplicates replicates the
+    reference's `threshold or default` quirk (app/hash_detector.py:187)."""
+    cfg = cfg or DedupConfig()
+    use_jaccard = scoring == "jaccard"
+    if use_jaccard:
+        _require_shingles(signatures)
+    parts = [v for v in (source.title, source.description)
+             if is_valid_field(v)]
+    text = " ".join(parts)
+    A, B = load_coeffs(cfg.num_hashes, cfg.seed)
+    src_sig = compute_text_signature(text, A, B, cfg)
+    url_keys = sorted({n for n in (normalize_url(source.url),
+                                   normalize_url(source.redirect_url)
+                                   if source.redirect_url else None) if n})
+    # metadata blocking keys (reference title / description-prefix
+    # candidate searches, app/wlo_client.py:265-311) — only useful when the
+    # corpus signatures carry the matching key columns
+    txt_keys: list[str] = []
+    if "title_keys" in signatures.columns:
+        txt_keys = _txt_keys(title_block_keys(source.title),
+                             description_block_key(source.description))
+    # same shingling as signatures_table (signature._shingle_array) so the
+    # driver-side source set can't drift from the stored arrays
+    src_shingles = (np.sort(_shingle_array(tokenize(text), cfg))
+                    if use_jaccard and src_sig is not None else None)
+    return _score_lookup(signatures, cfg, key_index, scoring, src_sig,
+                         src_shingles, url_keys, txt_keys)
 
 
 def build_candidate_stats(search_info: DataFrame,
@@ -429,15 +428,12 @@ def dedupe_one(signatures: DataFrame, url: str,
     url_exact or score >= threshold, similarity rounded to 4 dp like the
     reference boundary (app/hash_detector.py:303).
 
-    Scale shape: the source's ~b+2 keys are computed driver-side from the
-    single collected row (band hashes via the same xxHash64 the executors
-    use) and pushed into a key-list filter over the exploded key table —
-    one scan, no join against the full signatures table carries arrays.
-    Pass `key_index` (the persisted inverted key table built by
-    DedupPipeline.run(build_key_index=True) — range-partitioned and sorted
-    by key, so the IN-list filter prunes parquet row groups via min/max
-    stats) to skip re-exploding the signatures per query; without it the
-    keys are derived on the fly.
+    Scale shape: the source row is collected once; its ~b+2 keys filter
+    one scan of the key table and its vectors score the candidates
+    (`_score_lookup`). Pass `key_index` (the persisted inverted key table
+    built by DedupPipeline.run(build_key_index=True), sorted by key so the
+    IN-list filter prunes parquet row groups) to skip re-exploding the
+    signatures per query.
 
     `scoring` picks the keep semantics: None/"cosine" (default) is the
     reference cosine decision regardless of cfg.scoring, so the two
@@ -446,70 +442,28 @@ def dedupe_one(signatures: DataFrame, url: str,
     signatures table that kept the shingle arrays) and then the returned
     `similarity` column carries the exact Jaccard, rounded to 4 dp.
     """
-    from dataclasses import replace
-
-    from dedup.local_oracle import xxh64_band_key
-    from dedup.lsh import (key_rank_col, match_source_from_rank,
-                           unified_group_keys)
-    from dedup.verify import verify_pairs
-
     cfg = cfg or DedupConfig()
-    # project the source row down to the key-derivation columns before the
-    # collect — the full row would drag the shingle array (the widest
-    # column by far) to the driver just to be ignored
-    src_cols = ["minhash", "norm_url", "norm_redirect"]
-    if "title_keys" in signatures.columns:
-        src_cols += ["title_keys", "desc_key"]
-    src_rows = (signatures.where(F.col("url") == url)
-                .select(*src_cols).collect())
-    if not src_rows:
-        return signatures.sparkSession.createDataFrame(
-            [], "node_url string, similarity double, match_source string")
-    src = src_rows[0]
-
-    band_keys: list[int] = []
-    if src["minhash"] is not None:
-        b, r = cfg.lsh_bands, cfg.lsh_rows
-        mh = src["minhash"]
-        band_keys = [xxh64_band_key(i, mh[i * r:(i + 1) * r])
-                     for i in range(b)]
-    url_keys = sorted({n for n in (src["norm_url"], src["norm_redirect"])
-                       if n is not None})
-    txt_keys: list[str] = []
-    if "title_keys" in signatures.columns:
-        txt_keys = [f"t:{k}" for k in (src["title_keys"] or [])]
-        if src["desc_key"] is not None:
-            txt_keys.append(f"d:{src['desc_key']}")
-
-    keys = (key_index if key_index is not None
-            else unified_group_keys(signatures, cfg))
-    cands = (keys
-             .where(F.col("gk_band").isin(band_keys)
-                    | F.col("gk_url").isin(url_keys)
-                    | F.col("gk_txt").isin(txt_keys))
-             .where(F.col("url") != url)
-             .groupBy("url")
-             .agg(F.min(key_rank_col()).alias("_rank")))
-    pairs = cands.select(
-        F.lit(url).alias("a"), F.col("url").alias("b"),
-        match_source_from_rank(F.col("_rank")).alias("match_source"))
-    # keep-decision DEFAULTS to reference cosine regardless of engine
-    # scoring mode — dedupe_metadata filters by cosine too, so the two
-    # per-document query modes stay consistent under --engine-mode; an
-    # explicit scoring="jaccard" opts both modes into exact-Jaccard keeps
     use_jaccard = scoring == "jaccard"
     if use_jaccard:
         _require_shingles(signatures)
-    verified = verify_pairs(
-        pairs, signatures,
-        replace(cfg, scoring="jaccard" if use_jaccard else "cosine")
-    ).where("keep")
-    score_col = "jaccard" if use_jaccard else "similarity"
-    return (verified.select(
-        F.col("b").alias("node_url"),
-        F.round(score_col, 4).alias("similarity"),
-        "match_source")
-        .orderBy(F.desc("similarity"), F.asc("node_url")))
+    # the shingle array (the widest column by far) is collected only when
+    # it is scored
+    has_meta = "title_keys" in signatures.columns
+    src_cols = ["minhash", "norm_url", "norm_redirect"]
+    src_cols += ["title_keys", "desc_key"] if has_meta else []
+    src_cols += ["shingles"] if use_jaccard else []
+    src_rows = (signatures.where(F.col("url") == url)
+                .select(*src_cols).collect())
+    if not src_rows:
+        return signatures.sparkSession.createDataFrame([], _LOOKUP_SCHEMA)
+    src = src_rows[0]
+    url_keys = sorted({n for n in (src["norm_url"], src["norm_redirect"])
+                       if n is not None})
+    txt_keys = (_txt_keys(src["title_keys"] or [], src["desc_key"])
+                if has_meta else [])
+    return _score_lookup(signatures, cfg, key_index, scoring, src["minhash"],
+                         src["shingles"] if use_jaccard else None,
+                         url_keys, txt_keys, exclude=url)
 
 
 def candidates_df_from_pools(spark, pools: dict[str, list[dict]]) -> DataFrame:

@@ -5,24 +5,28 @@ vectors — NOT a Jaccard estimate (reference app/hash_detector.py:138-154,
 formula at :153). Parity runs must therefore use cosine; engine mode adds
 exact Jaccard over the shingle sets (the north-star's "exact verification").
 
+Every score in the engine comes from one of two batched Arrow kernels, which
+the per-document lookups in dedup/kernel.py share:
+- cosine: `_cosines_from_matrices` over `_list_array_matrix` views of the
+  signature ListArrays — batched BLAS, bit-identical to the reference's
+  per-pair float64 ``np.dot / (norm * norm)`` (verified in tests);
+- exact Jaccard: `batch_jaccards`, ONE searchsorted over the flattened
+  (pair_id << 32 | shingle) composite keys of two shingle ListArrays — no
+  per-pair Python loop anywhere.
+
 Scale notes:
 - candidate pairs arrive as a slim (a, b) table; signatures are joined back
   by key here so the wide arrays never ride through the banding shuffle.
-- parity cosine runs in an Arrow-batched pandas UDF using the same
-  ``np.dot / (norm * norm)`` float64 formula as the reference, per pair, so
-  scores agree to the last ulp (verified in tests).
 - engine (jaccard) mode is two-phase: a NATIVE MinHash-estimate prefilter
   over the already-joined signature vectors rejects most non-duplicate
-  pairs before the 10-100x wider shingle arrays are joined at all; the
-  survivors' exact Jaccard is ONE vectorized searchsorted per Arrow batch
-  over the flattened (pair_id << 32 | shingle) composite keys — no per-pair
-  Python loop anywhere.
+  pairs before the 10-100x wider shingle arrays are joined at all.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from dedup.config import DedupConfig, minhash_prefilter_min_equal
@@ -51,60 +55,52 @@ def _cosines_from_matrices(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return dots / (na * nb)
 
 
-def batch_cosines(sig_a_series, sig_b_series) -> np.ndarray:
-    """_cosines_from_matrices over two pandas Series of equal-length
-    signature arrays (stacked into rectangular matrices)."""
-    A = np.stack(sig_a_series.to_numpy()).astype(np.float64, copy=False)
-    B = np.stack(sig_b_series.to_numpy()).astype(np.float64, copy=False)
-    return _cosines_from_matrices(A, B)
-
-
 def _list_array_matrix(arr) -> np.ndarray:
     """pyarrow ListArray of equal-length numeric lists -> (n, k) float64
-    matrix. flatten() hands back the contiguous values buffer (offset-
-    adjusted), so this is one zero-copy view + one vectorized cast
-    instead of the per-row copies np.stack pays on a pandas object
-    Series."""
-    import pyarrow as pa
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
+    matrix: one zero-copy view of the values buffer + one vectorized cast
+    instead of the per-row copies np.stack pays on a pandas object Series.
+    Null rows or ragged lengths raise ValueError — a bare reshape would
+    misalign every row after the first short one."""
     n = len(arr)
     if n == 0:
         return np.zeros((0, 1), dtype=np.float64)
-    flat = arr.flatten()
-    return (np.asarray(flat, dtype=np.int64)
-            .reshape(n, len(flat) // n).astype(np.float64))
+    lens = np.diff(np.asarray(arr.offsets))
+    if arr.null_count or (lens != lens[0]).any():
+        raise ValueError(
+            f"expected {n} equal-length non-null lists, got "
+            f"{arr.null_count} nulls and lengths {lens.min()}..{lens.max()}")
+    return (np.asarray(arr.flatten(), dtype=np.int64)
+            .reshape(n, int(lens[0])).astype(np.float64))
 
 
-def batch_jaccards(sh_a_series, sh_b_series) -> np.ndarray:
-    """Exact Jaccard for a whole Arrow batch of (sorted, distinct, < 2^32)
-    shingle-array pairs with ONE np.searchsorted — no per-pair loop.
+def batch_jaccards(sh_a, sh_b) -> np.ndarray:
+    """Exact Jaccard for two Arrow ListArrays of (sorted, distinct, < 2^32)
+    shingle sets, row by row, with ONE np.searchsorted — no per-pair loop.
+    A null row is the empty set.
 
-    Shingle hashes are CRC32 values (< 2^32, dedup/signature.py), so packing
+    Shingle hashes are 32-bit values (dedup/signature.py), so packing
     (pair_id << 32 | value) into int64 yields composite keys that are
     globally sorted when concatenated in pair order (each per-pair array is
     stored sorted). One binary search of all A-side keys into the B-side
     buffer then counts every pairwise intersection at once; per-pair
     intersection sizes come back via bincount over the matched pair ids.
     """
-    n = len(sh_a_series)
-    empty = np.empty(0, dtype=np.int64)
-    # stored arrays are int32 BIT PATTERNS of the uint32 hashes (see
-    # dedup/signature.SIGNATURE_SCHEMA); masking after the int64 widen
-    # reconstructs the unsigned values, under which each array is sorted.
-    # (A nonnegative legacy int64 array passes through unchanged.)
-    a_arrays = [(np.asarray(x, dtype=np.int64) & 0xFFFFFFFF)
-                if x is not None else empty for x in sh_a_series]
-    b_arrays = [(np.asarray(x, dtype=np.int64) & 0xFFFFFFFF)
-                if x is not None else empty for x in sh_b_series]
-    lens_a = np.fromiter((x.size for x in a_arrays), np.int64, count=n)
-    lens_b = np.fromiter((x.size for x in b_arrays), np.int64, count=n)
-    flat_a = np.concatenate(a_arrays) if n else empty
-    flat_b = np.concatenate(b_arrays) if n else empty
-    pid_a = np.repeat(np.arange(n, dtype=np.int64), lens_a)
-    pid_b = np.repeat(np.arange(n, dtype=np.int64), lens_b)
-    comp_a = (pid_a << 32) | flat_a
-    comp_b = (pid_b << 32) | flat_b
+    n = len(sh_a)
+
+    def composite(arr):
+        lens = np.asarray(pc.list_value_length(arr).fill_null(0),
+                          dtype=np.int64)
+        # stored arrays are int32 BIT PATTERNS of the uint32 hashes (see
+        # dedup/signature.SIGNATURE_SCHEMA); masking after the int64 widen
+        # reconstructs the unsigned values, under which each array is
+        # sorted. (A nonnegative int64 array passes through unchanged.)
+        # flatten() skips null rows, which the zero lengths account for.
+        vals = np.asarray(arr.flatten(), dtype=np.int64) & 0xFFFFFFFF
+        pid = np.repeat(np.arange(n, dtype=np.int64), lens)
+        return lens, pid, (pid << 32) | vals
+
+    lens_a, pid_a, comp_a = composite(sh_a)
+    lens_b, _, comp_b = composite(sh_b)
     if comp_b.size and comp_a.size:
         idx = np.searchsorted(comp_b, comp_a)
         np.minimum(idx, comp_b.size - 1, out=idx)
@@ -116,6 +112,11 @@ def batch_jaccards(sh_a_series, sh_b_series) -> np.ndarray:
     with np.errstate(invalid="ignore", divide="ignore"):
         return np.where(union > 0, inter / union, 0.0)
 
+
+MIXED_SHINGLES_ERROR = (
+    "scoring='jaccard' hit a signed row with NULL shingles{}: the "
+    "signatures table mixes keep_shingles=False rows — rebuild it under "
+    "one engine config")
 
 _VERIFIED_SCHEMA = ("a string, b string, match_source string, "
                     "similarity double, jaccard double, keep boolean")
@@ -140,13 +141,13 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     the reference short-circuit (app/hash_detector.py:263-266, :295-297);
     they never reach the scoring stage.
 
-    Parity (cosine) mode: ONE mapInPandas stage over the natively-joined
-    (pair, sig_a, sig_b) rows — per-pair np.dot on float64, bit-identical
-    to the reference formula at app/hash_detector.py:153. mapInPandas
-    rather than a pandas_udf column on purpose — Catalyst re-evaluates
-    projected UDF columns under filters (`where(keep)` would chain two
-    ArrowEval stages), while a mapInPandas node is an optimizer barrier, so
-    downstream filters run above the single Python stage.
+    Parity (cosine) mode: ONE nondeterministic `arrow_udf` column over the
+    natively-joined signature pairs (`_cosines_from_matrices`). Only the two
+    signature arrays cross the Python boundary; the keep comparison stays
+    in SQL. asNondeterministic stops CollapseProject from inlining the UDF
+    once per referencing expression (keep + similarity) and stops filter
+    pushdown from re-evaluating it below `where(keep)`, so the plan holds
+    exactly one ArrowEvalPython.
 
     Engine (jaccard) mode adds a native prefilter BEFORE the shingle join:
     the MinHash Jaccard estimate (equal-component count over the two
@@ -154,11 +155,11 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     pairs estimating below jaccard_threshold - jaccard_prefilter_margin.
     Rejected pairs are emitted with NULL scores and keep=false — they never
     carry shingle arrays and never enter Python. Survivors join the shingle
-    arrays by key and are scored with one flattened searchsorted per Arrow
-    batch (batch_jaccards). The prefilter is a deterministic pure function
-    of the signatures and is replicated exactly by the single-node oracle
-    (dedup/local_oracle.local_verify), so Spark and oracle keep decisions
-    agree bit-for-bit.
+    arrays by key and are scored by ONE mapInArrow with both kernels
+    (cosine and batch_jaccards). The prefilter is a deterministic pure
+    function of the signatures and is replicated exactly by the single-node
+    oracle (dedup/local_oracle.local_verify), so Spark and oracle keep
+    decisions agree bit-for-bit.
     """
     if "match_source" not in pairs.columns:
         pairs = pairs.withColumn("match_source", F.lit("lsh"))
@@ -177,36 +178,15 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     joined = (pairs.where(F.col("match_source") != "url_exact")
               .join(sa, "a").join(sb, "b"))
 
-    threshold, j_threshold = cfg.threshold, cfg.jaccard_threshold
-
     if cfg.scoring != "jaccard":
-        # r6: an Arrow-UDF COLUMN instead of the former mapInPandas
-        # barrier, so only the two signature arrays cross the Python
-        # boundary — the pair/match_source strings used to ride the
-        # Arrow round-trip both ways for no reason (guide §4.1: pass
-        # only the columns the function needs) — and the ListArray
-        # values buffer is reshaped zero-copy instead of np.stack'ing
-        # one small array per row (guide §4.2). asNondeterministic is
-        # the guide §4.4 fix that (a) stops CollapseProject inlining the
-        # UDF once per referencing expression (keep + similarity) and
-        # (b) stops filter pushdown re-evaluating it below `where(keep)`
-        # — the two hazards the old barrier existed to avoid. Scores are
-        # the same BLAS doubles, the keep comparison moves to SQL
-        # unchanged (IEEE >=), and from_pandas=True keeps the NaN→NULL
-        # conversion the old pandas path performed.
-        import pyarrow as pa
-
         def _cosine_arrow(sig_a, sig_b):
-            A = _list_array_matrix(sig_a)
-            B = _list_array_matrix(sig_b)
-            if A.shape[0] == 0:
-                return pa.array(np.empty(0), type=pa.float64())
-            return pa.array(_cosines_from_matrices(A, B),
-                            type=pa.float64(), from_pandas=True)
+            return pa.array(
+                _cosines_from_matrices(_list_array_matrix(sig_a),
+                                       _list_array_matrix(sig_b)),
+                type=pa.float64(), from_pandas=True)  # NaN -> NULL
 
-        # real type objects, not strings: this module's `from __future__
-        # import annotations` would stringify inline hints, which
-        # arrow_udf's signature inference rejects
+        # real type objects: `from __future__ import annotations` would
+        # stringify inline hints, which arrow_udf's inference rejects
         _cosine_arrow.__annotations__ = {
             "sig_a": pa.Array, "sig_b": pa.Array, "return": pa.Array}
         cosine_udf = F.arrow_udf(_cosine_arrow, "double")
@@ -217,28 +197,21 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
                                   "_sig_a", "_sig_b"))
                   .select(
                       # nullif(null) never fires; the wrappers only pin
-                      # the all-nullable schema the old mapInPandas
-                      # barrier declared
+                      # the all-nullable output schema
                       F.nullif("a", F.lit(None).cast("string")).alias("a"),
                       F.nullif("b", F.lit(None).cast("string")).alias("b"),
                       F.nullif("match_source", F.lit(None).cast("string"))
                       .alias("match_source"),
                       F.col("similarity"),
-                      # the old barrier emitted np.nan through pandas,
-                      # which Arrow records as NULL — keep NULL exactly
                       F.lit(None).cast("double").alias("jaccard"),
-                      (F.col("similarity") >= F.lit(threshold))
+                      (F.col("similarity") >= F.lit(cfg.threshold))
                       .alias("keep")))
         return url_exact.unionByName(scored)
 
     # --- engine (jaccard) mode -------------------------------------------
-    # NOTE: rejected + survivors both derive from with_est, so the
-    # pairs-signatures join above is planned twice (once per branch of the
-    # final union). An A/B with a persisted with_est measured no wall-clock
-    # win at bench scale (AQE reuses the exchange; the join is cheap next
-    # to the mapInPandas scoring barrier), so the single-pass rewrite is
-    # deliberately NOT taken — revisit only if a profile shows the doubled
-    # join stage dominating at larger inputs.
+    # rejected + survivors both derive from with_est, so the join above is
+    # planned twice; AQE reuses the exchange, and a persisted with_est
+    # measured no wall-clock win at bench scale.
     min_equal = minhash_prefilter_min_equal(cfg)
     with_est = joined.withColumn("_est", minhash_estimate_equal_count_col())
     rejected = (with_est.where(F.col("_est") < min_equal)
@@ -253,31 +226,27 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     survivors = survivors.join(sha, "a").join(shb, "b")
 
     def score_jaccard(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        for rb in batches:
             # every row here carries a non-null minhash (the signature
             # join filters unsigned docs), so a null shingle array means a
             # MIXED signatures table (parity-slim rows appended into an
             # engine workdir, or a pre-keep_shingles resume) — fail loudly
             # instead of silently scoring 0.0/keep=false
-            for col in ("_sh_a", "_sh_b"):
-                if pdf[col].isna().any():
-                    bad = pdf.loc[pdf[col].isna(),
-                                  "a" if col == "_sh_a" else "b"].iloc[0]
+            for side, key in (("_sh_a", "a"), ("_sh_b", "b")):
+                col = rb.column(side)
+                if col.null_count:
+                    bad = rb.column(key).filter(col.is_null())[0].as_py()
                     raise ValueError(
-                        "scoring='jaccard' hit a signed row with NULL "
-                        f"shingles (url={bad!r}): the signatures table "
-                        "mixes keep_shingles=False rows — rebuild it "
-                        "under one engine config")
-            sims = batch_cosines(pdf["_sig_a"], pdf["_sig_b"])
-            jacs = batch_jaccards(pdf["_sh_a"], pdf["_sh_b"])
-            yield pd.DataFrame({
-                "a": pdf["a"], "b": pdf["b"],
-                "match_source": pdf["match_source"],
-                "similarity": sims, "jaccard": jacs,
-                "keep": jacs >= j_threshold,
-            })
+                        MIXED_SHINGLES_ERROR.format(f" (url={bad!r})"))
+            sims = _cosines_from_matrices(
+                _list_array_matrix(rb.column("_sig_a")),
+                _list_array_matrix(rb.column("_sig_b")))
+            jacs = batch_jaccards(rb.column("_sh_a"), rb.column("_sh_b"))
+            yield pa.RecordBatch.from_pydict({
+                "a": rb.column("a"), "b": rb.column("b"),
+                "match_source": rb.column("match_source"),
+                "similarity": pa.array(sims, from_pandas=True),  # NaN->NULL
+                "jaccard": jacs, "keep": jacs >= cfg.jaccard_threshold})
 
-    scored = survivors.mapInPandas(score_jaccard, schema=_VERIFIED_SCHEMA)
+    scored = survivors.mapInArrow(score_jaccard, schema=_VERIFIED_SCHEMA)
     return url_exact.unionByName(scored).unionByName(rejected)

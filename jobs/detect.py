@@ -136,8 +136,7 @@ def main() -> None:
             SourceMetadata(title=args.title, description=args.description,
                            url=args.source_url,
                            redirect_url=args.redirect_url),
-            cfg, threshold=args.threshold, key_index=key_index,
-            scoring=args.scoring)
+            cfg, key_index=key_index, scoring=args.scoring)
     limit = get_effective_max_candidates(args.max_candidates)
     for row in result.limit(limit).collect():
         print(json.dumps({"node_url": row["node_url"],

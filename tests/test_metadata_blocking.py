@@ -4,6 +4,8 @@ and the T6 metadata-signature fallback for text-less records."""
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,7 +109,8 @@ def test_dedupe_one_scores_metadata_fallback_signature(spark, meta_corpus):
 
 def test_dedupe_metadata_uses_title_and_redirect_keys(spark, meta_corpus):
     src = SourceMetadata(title="Shared d1a Lesson d1b Title - Wikipedia")
-    got = dedupe_metadata(meta_corpus, src, PARITY_CONFIG, threshold=0.0)
+    got = dedupe_metadata(meta_corpus, src,
+                          replace(PARITY_CONFIG, threshold=0.0))
     by_url = {r["node_url"]: r["match_source"] for r in got.collect()}
     # the normalized-title key reaches BOTH the text-backed doc and its
     # metadata-sparse twin; an explicit threshold=0.0 means "keep all"

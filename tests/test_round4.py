@@ -22,7 +22,7 @@ def _brute_jaccard(a, b):
 
 
 def test_batch_jaccards_equals_bruteforce():
-    import pandas as pd
+    import pyarrow as pa
 
     from dedup.verify import batch_jaccards
 
@@ -39,11 +39,28 @@ def test_batch_jaccards_equals_bruteforce():
     pairs_a += [np.empty(0, np.int64), np.empty(0, np.int64), None]
     pairs_b += [np.empty(0, np.int64), np.array([5], np.int64),
                 np.array([5], np.int64)]
-    got = batch_jaccards(pd.Series(pairs_a), pd.Series(pairs_b))
+    got = batch_jaccards(pa.array(pairs_a, type=pa.list_(pa.int64())),
+                         pa.array(pairs_b, type=pa.list_(pa.int64())))
     for i, (a, b) in enumerate(zip(pairs_a, pairs_b)):
         want = _brute_jaccard([] if a is None else a.tolist(),
                               [] if b is None else b.tolist())
         assert got[i] == pytest.approx(want, abs=0), i
+
+
+def test_list_array_matrix_rejects_ragged_and_null_rows():
+    import pyarrow as pa
+
+    from dedup.verify import _list_array_matrix
+
+    ok = pa.array([[1, 2], [3, 4], [5, 6]], type=pa.list_(pa.int64()))
+    assert _list_array_matrix(ok.slice(1)).tolist() == [[3.0, 4.0],
+                                                         [5.0, 6.0]]
+    # the first case's total length divides evenly (6 = 3 * 2) — a bare
+    # reshape would silently misalign its rows
+    for bad in ([[1, 2], [3], [4, 5, 6]], [[1], [2, 3], [4, 5]],
+                [[1, 2], None]):
+        with pytest.raises(ValueError):
+            _list_array_matrix(pa.array(bad, type=pa.list_(pa.int64())))
 
 
 def test_engine_verify_matches_oracle_including_prefilter(spark):
@@ -163,14 +180,14 @@ def test_rolling_char_shingles_match_spec(words, k):
     st.lists(st.integers(0, 2**32 - 1), max_size=30)), max_size=20))
 @settings(max_examples=40, deadline=None)
 def test_batch_jaccards_property(pairs):
-    import pandas as pd
+    import pyarrow as pa
 
     from dedup.verify import batch_jaccards
 
     a = [np.array(sorted(set(x)), dtype=np.int64) for x, _ in pairs]
     b = [np.array(sorted(set(y)), dtype=np.int64) for _, y in pairs]
-    got = batch_jaccards(pd.Series(a, dtype=object),
-                         pd.Series(b, dtype=object))
+    got = batch_jaccards(pa.array(a, type=pa.list_(pa.int64())),
+                         pa.array(b, type=pa.list_(pa.int64())))
     for i, (x, y) in enumerate(pairs):
         assert got[i] == _brute_jaccard(x, y)
 

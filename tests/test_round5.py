@@ -149,13 +149,14 @@ def test_merge_assignments_size_gate_fallback(spark):
 
 def test_mixed_signatures_table_fails_loud_in_jaccard_mode(spark):
     """A signatures table mixing shingle-bearing engine rows with
-    parity-slim (null-shingle) rows must raise on a jaccard-scored query,
-    not silently drop the slim rows' candidates (ADVICE r4: the
-    single-row probe can miss appended slim rows)."""
+    parity-slim (null-shingle) rows must raise on every jaccard-scored
+    query, by metadata or by url, not silently drop the slim rows'
+    candidates (ADVICE r4: the single-row probe can miss appended slim
+    rows)."""
     import pytest as _pytest
 
     from dedup.config import ENGINE_CONFIG
-    from dedup.kernel import dedupe_metadata, SourceMetadata
+    from dedup.kernel import dedupe_metadata, dedupe_one, SourceMetadata
     from dedup.signature import signatures_table
 
     texts = [(f"https://m.example/{i}",
@@ -174,13 +175,19 @@ def test_mixed_signatures_table_fails_loud_in_jaccard_mode(spark):
     with _pytest.raises(Exception, match="shingle"):
         dedupe_metadata(mixed, SourceMetadata(title=texts[1][1]),
                         ENGINE_CONFIG, scoring="jaccard").collect()
+    # a full source whose slim near-copies are candidates, and a slim source
+    for url in (texts[0][0], texts[1][0]):
+        with _pytest.raises(Exception, match="shingle"):
+            dedupe_one(mixed, url, ENGINE_CONFIG, scoring="jaccard").collect()
 
 
 def test_dedupe_metadata_jaccard_threshold_zero_keeps_everything(spark):
-    """The prefilter cut derives from the CALLER'S threshold: an explicit
-    threshold=0.0 ('keep everything', kernel.py contract) must surface a
-    title-key candidate with near-zero text similarity that the default
-    cfg-threshold cut would reject before scoring."""
+    """The prefilter cut derives from the caller's cfg.jaccard_threshold:
+    jaccard_threshold=0.0 ('keep everything', kernel.py contract) must
+    surface a title-key candidate with near-zero text similarity that the
+    default threshold's cut would reject before scoring."""
+    from dataclasses import replace
+
     from dedup.config import ENGINE_CONFIG
     from dedup.kernel import SourceMetadata, dedupe_metadata
     from dedup.signature import signatures_table
@@ -199,11 +206,11 @@ def test_dedupe_metadata_jaccard_threshold_zero_keeps_everything(spark):
               for r in dedupe_metadata(sigs, src, ENGINE_CONFIG,
                                        scoring="jaccard").collect()}
     keep_all = {r["node_url"]
-                for r in dedupe_metadata(sigs, src, ENGINE_CONFIG,
-                                         threshold=0.0,
-                                         scoring="jaccard").collect()}
+                for r in dedupe_metadata(
+                    sigs, src, replace(ENGINE_CONFIG, jaccard_threshold=0.0),
+                    scoring="jaccard").collect()}
     # the title-key candidate has ~0 text Jaccard: dropped under the
-    # default threshold, present under threshold=0.0
+    # default threshold, present under jaccard_threshold=0.0
     assert "https://t.example/a" not in strict
     assert "https://t.example/a" in keep_all
 

@@ -202,7 +202,8 @@ def test_verify_cosine_matches_r5_barrier_and_evaluates_udf_once(spark):
     from dedup.lsh import candidate_pairs
     from dedup.queries import docs_as_corpus
     from dedup.signature import signatures_table
-    from dedup.verify import _VERIFIED_SCHEMA, batch_cosines, verify_pairs
+    from dedup.verify import (_VERIFIED_SCHEMA, cosine_similarity,
+                              verify_pairs)
 
     def old_verify(pairs, signatures, cfg):
         sig = (signatures.select("url", "minhash")
@@ -224,7 +225,8 @@ def test_verify_cosine_matches_r5_barrier_and_evaluates_udf_once(spark):
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                sims = batch_cosines(pdf["_sig_a"], pdf["_sig_b"])
+                sims = np.array([cosine_similarity(x, y) for x, y in
+                                 zip(pdf["_sig_a"], pdf["_sig_b"])])
                 yield pd.DataFrame({
                     "a": pdf["a"], "b": pdf["b"],
                     "match_source": pdf["match_source"],
