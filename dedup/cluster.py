@@ -204,25 +204,29 @@ def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
     the component-minimum url: a merged component's id is the min over all
     its members, exactly what a full recompute yields.
 
-    Scale shape: a crawl drop touches a sliver of the corpus, so
-    touched_clusters is usually broadcast against the big assignment
+    Scale shape: a crawl drop touches a sliver of the corpus, so the
+    touched cluster ids are usually broadcast against the big assignment
     table; the full assignment is scanned once for the member pull and
     once for the anti-join pass-through — no full-graph CC rounds. The
-    broadcast is SIZE-GATED (same discipline as connected_components'
-    driver gate): a pathological drop touching more than
+    broadcast is SIZE-GATED by one driver step, the same gate as
+    `_components`: a bounded limit(broadcast_threshold + 1).collect() of
+    the touched ids. Under the gate the collected ids become a local
+    broadcast relation; a pathological drop touching more than
     `broadcast_threshold` clusters falls back to shuffle joins instead of
-    blowing the driver/executor broadcast memory. The probe is a single
-    bounded scan (limit(threshold+1).count()).
+    blowing the driver/executor broadcast memory. Callers pass edges that
+    are cheap to re-read (ingest_drop pins them): the gate and the
+    re-solve each scan them.
     """
     touched_urls = (new_edges.select(F.col("a").alias("url"))
-                    .unionByName(new_edges.select(F.col("b").alias("url")))
-                    .distinct())
-    touched_clusters = (assignments.join(touched_urls, "url")
-                        .select("cluster_id").distinct()
-                        .localCheckpoint())  # computed once, reused 3x
-    small = (touched_clusters.limit(broadcast_threshold + 1).count()
-             <= broadcast_threshold)
-    tc = F.broadcast(touched_clusters) if small else touched_clusters
+                    .unionByName(new_edges.select(F.col("b").alias("url"))))
+    touched_clusters = (assignments.join(touched_urls, "url", "left_semi")
+                        .select("cluster_id").distinct())
+    ids = touched_clusters.limit(broadcast_threshold + 1).collect()
+    if len(ids) <= broadcast_threshold:
+        tc = F.broadcast(assignments.sparkSession.createDataFrame(
+            ids, touched_clusters.schema))
+    else:
+        tc = touched_clusters
     affected = assignments.join(tc, "cluster_id")
     star = (affected.where(F.col("url") != F.col("cluster_id"))
             .select(F.col("cluster_id").alias("a"), F.col("url").alias("b")))

@@ -34,7 +34,8 @@ from dedup.local_oracle import xxh64_band_key
 from dedup.lsh import key_rank_col, match_source_from_rank, unified_group_keys
 from dedup.normalize import (description_block_key, is_valid_field,
                              normalize_url, title_block_keys)
-from dedup.signature import _shingle_array, compute_text_signature, tokenize
+from dedup.signature import (SHINGLES_DROPPED, _shingle_array,
+                             compute_text_signature, tokenize)
 from dedup.verify import (MIXED_SHINGLES_ERROR, _cosines_from_matrices,
                           _list_array_matrix, batch_jaccards,
                           cosine_similarity)
@@ -62,19 +63,13 @@ class SourceMetadata:
 
 
 def _require_shingles(signatures: DataFrame) -> None:
-    """scoring='jaccard' needs real shingle arrays. A parity-slim table
-    still carries the column (all null, keep_shingles=False), so probe one
-    signed row — silently-empty results would otherwise masquerade as
-    'no duplicates'."""
-    if "shingles" not in signatures.columns:
-        raise ValueError(
-            "scoring='jaccard' needs a signatures table with shingle "
-            "arrays (build it under an engine config / keep_shingles=True)")
-    probe = (signatures.where(F.col("minhash").isNotNull())
-             .select("shingles").first())
-    if probe is None:
-        return  # no signed rows at all — nothing to score, not a slim table
-    if probe["shingles"] is None:
+    """scoring='jaccard' needs real shingle arrays: a schema check only, so
+    building a lookup launches no job. A table signed with keep_shingles
+    off says so in the shingles field's metadata (SHINGLES_DROPPED); a
+    table that mixes in null-shingle rows without saying so raises on the
+    first such row at scoring time (_source_score_udf)."""
+    if ("shingles" not in signatures.columns
+            or signatures.schema["shingles"].metadata.get(SHINGLES_DROPPED)):
         raise ValueError(
             "scoring='jaccard' needs a signatures table with shingle "
             "arrays (build it under an engine config / keep_shingles=True)")

@@ -52,6 +52,10 @@ SIGNATURE_SCHEMA = (
     "minhash array<bigint>, simhash bigint, "
     "shingles array<int>, n_tokens int"
 )
+# field-metadata key on `shingles` for tables signed with keep_shingles off
+# (the column is then all NULL): lets exact-Jaccard lookups refuse such a
+# table from its schema alone
+SHINGLES_DROPPED = "dedup.shingles_dropped"
 
 
 # --- pure per-document functions (shared with the single-node oracle) --------
@@ -444,4 +448,7 @@ def signatures_table(corpus, cfg: DedupConfig, text_col: str = "text",
         schema += ", title_keys array<string>, desc_key string"
     if emit_text:
         schema += ", text string"
-    return corpus.select(*cols).mapInPandas(compute, schema=schema)
+    sigs = corpus.select(*cols).mapInPandas(compute, schema=schema)
+    if keep_shingles:
+        return sigs
+    return sigs.withMetadata("shingles", {SHINGLES_DROPPED: True})

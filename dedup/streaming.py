@@ -343,13 +343,23 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
        the same verify_pairs) and merges kept edges into the maintained
        assignment via cluster.merge_assignments, so only the touched
        components are re-solved;
-    3. documents never seen in an edge enter as singletons.
+    3. documents never seen in an edge enter as singletons — inside the
+       fold, or by a top-up pass when no micro-batch was folded.
 
-    Returns the updated assignments DataFrame (url, cluster_id). At drop
-    sizes << corpus size the CC work is O(drop + touched clusters), not a
-    full recompute; semantics match the batch pipeline whenever no bucket
+    Each micro-batch runs the stateful pair plan once: the fold pins the
+    micro-batch and its verified edges (persist, materialized by one
+    count()) before merging, because every read of the micro-batch would
+    otherwise re-run the signing, key emission and state commit.
+
+    Returns the updated assignments DataFrame (url, cluster_id). The
+    connected-components work is O(drop + touched clusters), not a full
+    recompute; semantics match the batch pipeline whenever no bucket
     exceeds the streaming state cap (hot buckets degrade to the same
-    star-edge connectivity the batch path uses). Storage note: every fold
+    star-edge connectivity the batch path uses). Three parts of a fold are
+    still O(corpus): `latest_signatures` windows the whole signatures
+    directory, each fold rewrites the full assignment table, and the pair
+    stream signs the drop a second time (stream_candidate_pairs reads the
+    raw source, not the rows q1 wrote). Storage note: every fold
     lands the assignment in a FRESH `workdir/assignments_v{n}` dir with a
     manifest pointer (the table was rewritten wholesale anyway, so the
     version history is free) — `read_assignments(workdir, version=...)`
@@ -394,22 +404,45 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
             return read_assignments(spark, workdir)
         return None
 
+    folded = []
+
     def fold(batch_df, batch_id):
         sigs = latest_sigs()
-        verified = (verify_pairs(batch_df, sigs, cfg)
-                    .where("keep").select("a", "b"))
-        assignments = current_assignments()
-        if assignments is None:
-            assignments = sigs.select(
-                "url", F.col("url").alias("cluster_id"))
-        new_urls = (sigs.select("url")
-                    .join(assignments.select("url"), "url", "left_anti")
-                    .select("url", F.col("url").alias("cluster_id")))
-        merged = merge_assignments(assignments.unionByName(new_urls),
-                                   verified)
-        # fresh versioned dir: no read-overwrite hazard, and the version
-        # history gives Iceberg-snapshot-style as-of reads for free
-        _write_assignment_version(merged, workdir)
+        # every read of batch_df re-runs the whole stateful pair plan
+        # (signing, key emission, state load and commit). verify_pairs
+        # reads its pairs twice (url_exact and scored branches), so the
+        # micro-batch is pinned under the verified edges; one count()
+        # materializes every partition of both, and no later action
+        # falls through to the stateful plan
+        pairs = batch_df.persist()
+        verified = (verify_pairs(pairs, sigs, cfg)
+                    .where("keep").select("a", "b").persist())
+        try:
+            verified.count()
+            assignments = current_assignments()
+            if assignments is None:
+                assignments = sigs.select(
+                    "url", F.col("url").alias("cluster_id"))
+            # signed urls with no assignment yet: merge_assignments
+            # clusters the ones an edge touches, the rest enter as
+            # singletons — kept out of the merge so its driver steps never
+            # read the signatures window
+            edge_urls = (verified.select(F.col("a").alias("url"))
+                         .unionByName(verified.select(F.col("b")
+                                                      .alias("url"))))
+            new_urls = (sigs.select("url")
+                        .join(assignments.select("url"), "url", "left_anti")
+                        .join(edge_urls, "url", "left_anti")
+                        .select("url", F.col("url").alias("cluster_id")))
+            merged = (merge_assignments(assignments, verified)
+                      .unionByName(new_urls))
+            # fresh versioned dir: no read-overwrite hazard, and the
+            # version history gives Iceberg-snapshot-style as-of reads
+            _write_assignment_version(merged, workdir)
+        finally:
+            verified.unpersist()
+            pairs.unpersist()
+        folded.append(batch_id)
 
     src = spark.readStream.schema(schema).parquet(source_dir)
     q2 = (stream_candidate_pairs(src.select("url", "text"), cfg,
@@ -418,6 +451,10 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
           .option("checkpointLocation", f"{workdir}/ckpt_pairs")
           .outputMode("append").trigger(availableNow=True).start())
     q2.awaitTermination()
+    if folded:
+        # a fold assigns every signed url (merged or new_urls), and q1
+        # finished before q2 started: nothing is left to top up
+        return read_assignments(spark, workdir)
 
     # a drop whose documents hit no blocking bucket emits no micro-batch
     # at all — enter those documents as singletons

@@ -192,42 +192,6 @@ def test_key_index_stage_and_point_queries(spark, tmp_path):
     assert not any(s.skipped for s in p3.stage_infos)
 
 
-def test_ingest_drop_incremental_equals_batch(spark, tmp_path):
-    """Two crawl drops through streaming.ingest_drop (signatures append ->
-    stateful pairs -> verify -> merge_assignments) must end at EXACTLY the
-    batch pipeline's clustering of the union corpus — cross-drop dups only
-    co-cluster if bucket state and the incremental merge both work."""
-    import glob
-    import shutil
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.queries import docs_as_corpus, q_dup_clusters
-    from dedup.streaming import ingest_drop
-
-    c = docs_as_corpus(spark, SF).select("url", "text", "doc_id")
-    src = str(tmp_path / "src")
-    wd = str(tmp_path / "wd")
-    (tmp_path / "src").mkdir()
-    results = []
-    for drop_no, pred in enumerate(("doc_id % 2 = 0", "doc_id % 2 = 1")):
-        tmp = str(tmp_path / f"tmp{drop_no}")
-        c.where(pred).select("url", "text").coalesce(1).write.parquet(tmp)
-        part = glob.glob(f"{tmp}/part-*.parquet")[0]
-        shutil.copy(part, f"{src}/drop{drop_no}.parquet")
-        # collect eagerly: the returned frame is a live view of the
-        # assignments dir, which the next drop overwrites
-        results.append({(r["url"], r["cluster_id"])
-                        for r in ingest_drop(
-                            spark, src, wd, PARITY_CONFIG,
-                            schema="url string, text string").collect()})
-
-    want = {(r["url"], r["cluster_id"])
-            for r in q_dup_clusters(spark, SF).collect()}
-    assert results[-1] == want
-    # intermediate state after drop 1 covered only the even docs
-    assert len(results[0]) < len(results[-1])
-
-
 def test_minhash_signatures_engine_matches_local(spark):
     from dedup import local_oracle as lo
     from dedup.config import ENGINE_CONFIG

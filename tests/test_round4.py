@@ -1,7 +1,7 @@
 """Round-4 coverage: fully-vectorized engine Jaccard verify (flattened
 searchsorted + native MinHash-estimate prefilter), dense int64 CC vertex
 encoding, trained IVF quantizer (artifact + recall), --scoring CLI flag,
-ingest url re-delivery dedup, incremental-ingest driver row."""
+incremental-ingest driver row."""
 
 from __future__ import annotations
 
@@ -332,40 +332,6 @@ def test_dedupe_metadata_jaccard_scoring(spark):
         from dedup.kernel import dedupe_one
         dedupe_one(slim, "https://mirror.net/copy/7", PARITY_CONFIG,
                    scoring="jaccard")
-
-
-# --- streaming ingest: url re-delivery --------------------------------------
-
-def test_ingest_redelivered_url_stays_single(spark, tmp_path):
-    """A url re-delivered in a later drop must not duplicate assignment
-    rows nor signature-join rows (ADVICE r3: dropDuplicates on the
-    accumulated signatures read)."""
-    import glob
-    import shutil
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.queries import docs_as_corpus
-    from dedup.streaming import ingest_drop
-
-    c = docs_as_corpus(spark, SF).select("url", "text", "doc_id")
-    src = tmp_path / "src"
-    src.mkdir()
-    drop0 = c.where("doc_id < 40").select("url", "text")
-    drop1 = c.where("doc_id >= 30 AND doc_id < 70").select("url", "text")
-    for i, d in enumerate((drop0, drop1)):
-        tmp = str(tmp_path / f"tmp{i}")
-        d.coalesce(1).write.parquet(tmp)
-        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0],
-                    str(src / f"drop{i}.parquet"))
-        result = ingest_drop(spark, str(src), str(tmp_path / "wd"),
-                             PARITY_CONFIG,
-                             schema="url string, text string")
-    rows = result.collect()
-    urls = [r["url"] for r in rows]
-    assert len(urls) == len(set(urls))
-    assert set(urls) == {r["url"]
-                         for r in c.where("doc_id < 70").select("url")
-                         .distinct().collect()}
 
 
 # --- training-pipeline extras: decontamination + repetition gate -------------

@@ -119,34 +119,6 @@ def test_semantic_dedup_reports_capped_cells(spark):
     assert tail
 
 
-def test_merge_assignments_size_gate_fallback(spark):
-    """A drop touching more clusters than the broadcast threshold must
-    take the shuffle-join fallback and still produce the exact merged
-    assignment (VERDICT r4 #6)."""
-    from dedup.cluster import assign_clusters, merge_assignments
-
-    urls = spark.createDataFrame([(f"u{i}",) for i in range(12)],
-                                 "url string")
-    first = spark.createDataFrame(
-        [(f"u{i}", f"u{i+1}") for i in range(0, 12, 2)],
-        "a string, b string")  # 6 two-member clusters
-    base = assign_clusters(urls, first)
-    # bridge edges touching EVERY cluster
-    bridges = spark.createDataFrame(
-        [(f"u{i+1}", f"u{i+2}") for i in range(0, 10, 2)],
-        "a string, b string")
-    want = {(r["url"], r["cluster_id"])
-            for r in assign_clusters(urls,
-                                     first.unionByName(bridges)).collect()}
-    got_fallback = {(r["url"], r["cluster_id"])
-                    for r in merge_assignments(
-                        base, bridges, broadcast_threshold=1).collect()}
-    got_broadcast = {(r["url"], r["cluster_id"])
-                     for r in merge_assignments(base, bridges).collect()}
-    assert got_fallback == want
-    assert got_broadcast == want
-
-
 def test_mixed_signatures_table_fails_loud_in_jaccard_mode(spark):
     """A signatures table mixing shingle-bearing engine rows with
     parity-slim (null-shingle) rows must raise on every jaccard-scored
@@ -215,95 +187,6 @@ def test_dedupe_metadata_jaccard_threshold_zero_keeps_everything(spark):
     assert "https://t.example/a" in keep_all
 
 
-def test_latest_signatures_sees_batch_appends_past_sink_log(spark, tmp_path):
-    """A signatures dir started by the OLD streaming parquet sink carries
-    a _spark_metadata log; a plain batch read trusts it and silently hides
-    every batch-appended file (the new append path). latest_signatures
-    must glob past the log and merge stamped/unstamped schemas."""
-    import glob
-    import shutil
-    from pathlib import Path
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.signature import signatures_table
-    from dedup.streaming import latest_signatures, stream_signatures
-
-    src = tmp_path / "src"
-    src.mkdir()
-    sig_dir, ckpt = str(tmp_path / "sigs"), str(tmp_path / "ckpt")
-    tmp = str(tmp_path / "d0")
-    spark.createDataFrame([("https://l.example/a", "alpha " * 30)],
-                          "url string, text string") \
-        .coalesce(1).write.parquet(tmp)
-    shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0],
-                str(src / "d0.parquet"))
-    q = (stream_signatures(
-        spark.readStream.schema("url string, text string")
-        .parquet(str(src)), PARITY_CONFIG)
-        .writeStream.format("parquet").option("path", sig_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    assert Path(sig_dir, "_spark_metadata").exists()
-
-    # new-code batch append of a stamped row
-    from pyspark.sql import functions as F
-    (signatures_table(
-        spark.createDataFrame([("https://l.example/b", "bravo " * 30)],
-                              "url string, text string"), PARITY_CONFIG)
-        .withColumn("ingest_batch", F.lit(0))
-        .write.mode("append").parquet(sig_dir))
-
-    # the hazard this guards against: a plain read trusts the sink log
-    assert spark.read.parquet(sig_dir).count() == 1
-    urls = {r["url"] for r in latest_signatures(spark, sig_dir).collect()}
-    assert urls == {"https://l.example/a", "https://l.example/b"}
-
-
-def test_ingest_assignment_snapshots_as_of_reads(spark, tmp_path):
-    """Every ingest fold lands in a fresh versioned dir: after a second
-    drop, the assignment AS OF the first drop's end is still readable and
-    equals what the first ingest_drop call returned (Iceberg-snapshot
-    analog); unknown versions raise."""
-    import glob
-    import shutil
-
-    import pytest as _pytest
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.queries import docs_as_corpus
-    from dedup.streaming import (ingest_drop, list_assignment_versions,
-                                 read_assignments)
-
-    c = docs_as_corpus(spark, "/root/testdata/sf0.001") \
-        .where("doc_id < 60").select("url", "text", "doc_id")
-    src = tmp_path / "src"
-    src.mkdir()
-    wd = str(tmp_path / "wd")
-    results = []
-    for i, pred in enumerate(("doc_id < 30", "doc_id >= 30")):
-        tmp = str(tmp_path / f"tmp{i}")
-        c.where(pred).select("url", "text").coalesce(1).write.parquet(tmp)
-        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0],
-                    str(src / f"drop{i}.parquet"))
-        r = ingest_drop(spark, str(src), wd, PARITY_CONFIG,
-                        schema="url string, text string")
-        results.append({(x["url"], x["cluster_id"]) for x in r.collect()})
-        if i == 0:
-            v_end_drop0 = max(list_assignment_versions(wd))
-
-    versions = list_assignment_versions(wd)
-    assert len(versions) >= 2 and v_end_drop0 < max(versions)
-    as_of = {(x["url"], x["cluster_id"])
-             for x in read_assignments(spark, wd, v_end_drop0).collect()}
-    assert as_of == results[0]
-    latest = {(x["url"], x["cluster_id"])
-              for x in read_assignments(spark, wd).collect()}
-    assert latest == results[1]
-    with _pytest.raises(KeyError):
-        read_assignments(spark, wd, 999)
-
-
 # --- signature-version lineage token (round-5 ADVICE, medium) ---------------
 
 
@@ -322,52 +205,6 @@ def test_key_config_carries_signature_version():
     assert key_config(legacy) != live
     current = {**asdict(PARITY_CONFIG), "sig_version": SIGNATURE_VERSION}
     assert key_config(current) == live
-
-
-def test_redelivered_url_with_changed_text_keeps_freshest(spark, tmp_path):
-    """ADVICE r4: a re-crawl whose text CHANGED must deterministically pin
-    the newest delivery's signature, not an arbitrary row per run."""
-    import glob
-    import shutil
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.signature import signatures_table
-    from dedup.streaming import ingest_drop, latest_signatures
-
-    text_a = "alpha " * 40
-    text_b = "bravo " * 40
-    drops = [
-        [("https://x.example/recrawl", text_a),
-         ("https://x.example/other1", "gamma " * 40)],
-        [("https://x.example/recrawl", text_b),
-         ("https://x.example/other2", "delta " * 40)],
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    wd = str(tmp_path / "wd")
-    for i, rows in enumerate(drops):
-        tmp = str(tmp_path / f"tmp{i}")
-        spark.createDataFrame(rows, "url string, text string") \
-            .coalesce(1).write.parquet(tmp)
-        shutil.copy(glob.glob(f"{tmp}/part-*.parquet")[0],
-                    str(src / f"drop{i}.parquet"))
-        ingest_drop(spark, str(src), wd, PARITY_CONFIG,
-                    schema="url string, text string")
-
-    raw = spark.read.parquet(f"{wd}/signatures")
-    recrawl_rows = raw.where("url = 'https://x.example/recrawl'").collect()
-    assert len(recrawl_rows) == 2  # both deliveries appended
-    assert "ingest_batch" in raw.columns
-
-    kept = latest_signatures(spark, f"{wd}/signatures") \
-        .where("url = 'https://x.example/recrawl'").collect()
-    assert len(kept) == 1
-    expect = signatures_table(
-        spark.createDataFrame([("https://x.example/recrawl", text_b)],
-                              "url string, text string"),
-        PARITY_CONFIG).first()
-    assert list(kept[0]["minhash"]) == list(expect["minhash"])
-    assert kept[0]["simhash"] == expect["simhash"]
 
 
 def test_pre_version_manifest_forces_recompute(spark, tmp_path):
@@ -492,54 +329,6 @@ def test_metrics_read_merges_grown_schema(spark, tmp_path):
     assert "n_capped_buckets" in m.columns
     vals = {r["n_capped_buckets"] for r in m.collect()}
     assert vals == {None, 3}
-
-
-def test_torn_manifest_rebuild_respects_commit_and_retention(tmp_path):
-    """The torn-manifest rebuild must not adopt an uncommitted orphan dir
-    as latest, must not resurrect dirs beyond the retention window, and
-    must still adopt marker-less dirs for pre-marker legacy workdirs
-    (round-5 review finding)."""
-    import os
-
-    from dedup.streaming import (_ASSIGN_MANIFEST, _read_assign_manifest,
-                                 KEEP_ASSIGNMENT_VERSIONS)
-
-    def mkver(wd, v, committed):
-        d = wd / f"assignments_v{v}"
-        os.makedirs(d)
-        (d / "_SUCCESS").touch()
-        if committed:
-            (d / "_COMMITTED").touch()
-
-    # orphan exclusion: v3's parquet finished but its fold never repointed
-    wd = tmp_path / "a"
-    os.makedirs(wd)
-    (wd / _ASSIGN_MANIFEST).write_text('{"latest": 2, "versi')  # torn
-    mkver(wd, 1, True)
-    mkver(wd, 2, True)
-    mkver(wd, 3, False)
-    man = _read_assign_manifest(str(wd))
-    assert man == {"latest": 2, "versions": [1, 2]}
-
-    # legacy workdir (no markers anywhere): adopt every complete dir
-    wd = tmp_path / "b"
-    os.makedirs(wd)
-    (wd / _ASSIGN_MANIFEST).write_text("{broken")
-    mkver(wd, 1, False)
-    mkver(wd, 2, False)
-    man = _read_assign_manifest(str(wd))
-    assert man == {"latest": 2, "versions": [1, 2]}
-
-    # retention: expired dirs a crash left behind must not resurrect
-    wd = tmp_path / "c"
-    os.makedirs(wd)
-    (wd / _ASSIGN_MANIFEST).write_text("{broken")
-    n = KEEP_ASSIGNMENT_VERSIONS + 3
-    for v in range(1, n + 1):
-        mkver(wd, v, True)
-    man = _read_assign_manifest(str(wd))
-    assert man["latest"] == n
-    assert man["versions"] == list(range(4, n + 1))
 
 
 def test_task_totals_keeps_latest_stage_attempt():
