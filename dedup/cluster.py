@@ -19,6 +19,7 @@ min, so results are IDENTICAL to the string path (equality-tested)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -99,6 +100,15 @@ def _encode_vertices(e: DataFrame) -> DataFrame | None:
     return None
 
 
+def _local_frame(spark, **cols: list[str]) -> DataFrame:
+    """Driver-held string columns -> a DataFrame over one Arrow table. It
+    plans as a LocalRelation with exact size statistics, so the planner
+    broadcasts it under autoBroadcastJoinThreshold without a hint, where a
+    frame built from a Python list is an RDD scan of unknown size."""
+    return spark.createDataFrame(pa.table(
+        {k: pa.array(v, pa.string()) for k, v in cols.items()}))
+
+
 def connected_components(edges: DataFrame, max_iterations: int = 30,
                          driver_threshold: int = 200_000,
                          encode_ids: bool = True) -> DataFrame:
@@ -115,7 +125,11 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
     web-scale 2 KB URLs that bounds the collect at ~1 GB of driver heap
     worst-case (typical URLs ~100 B → ~40 MB). Larger edge sets (the
     10^12-doc case) take the distributed large-star/small-star path; pass
-    driver_threshold=0 to force it (tests do).
+    driver_threshold=0 to force it (tests do). The driver result is a
+    local Arrow relation (`_local_frame`); above
+    `spark.sql.execution.arrow.localRelationThreshold` (48 MB by default)
+    Spark ships it as an RDD scan instead, and joins against it fall back
+    to the planner's default strategy.
 
     The distributed path propagates over a dense int64 vertex encoding by
     default (see module docstring; encode_ids=False keeps the string
@@ -123,15 +137,6 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
     is recomputed as the component-minimum URL after decoding, so outputs
     match the string path exactly.
     """
-    return _components(edges, max_iterations, driver_threshold,
-                       encode_ids)[0]
-
-
-def _components(edges: DataFrame, max_iterations: int = 30,
-                driver_threshold: int = 200_000,
-                encode_ids: bool = True) -> tuple[DataFrame, bool]:
-    """connected_components, plus whether the assignment was built on the
-    driver (and so is bounded by driver_threshold)."""
     e = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
          .where(F.col("u") != F.col("v")).distinct())
     spark = edges.sparkSession
@@ -139,9 +144,6 @@ def _components(edges: DataFrame, max_iterations: int = 30,
         # single scan: pull at most threshold+1 edges; the sentinel row
         # (if present) sends us down the distributed path
         sample = e.limit(driver_threshold + 1).collect()
-        if not sample:
-            return (spark.createDataFrame([], "url string, cluster_id string"),
-                    True)
         if len(sample) <= driver_threshold:
             parent: dict[str, str] = {}
 
@@ -156,12 +158,10 @@ def _components(edges: DataFrame, max_iterations: int = 30,
                 ra, rb = find(row[0]), find(row[1])
                 if ra != rb:
                     parent[max(ra, rb)] = min(ra, rb)
-            assign = [(v, find(v)) for v in parent]
-            return (spark.createDataFrame(
-                assign, "url string, cluster_id string"), True)
-    if e.isEmpty():
-        return (spark.createDataFrame([], "url string, cluster_id string"),
-                False)
+            return _local_frame(spark, url=list(parent),
+                                cluster_id=[find(v) for v in parent])
+    elif e.isEmpty():
+        return _local_frame(spark, url=[], cluster_id=[])
 
     d = _encode_vertices(e) if encode_ids else None
     if d is not None:
@@ -177,14 +177,14 @@ def _components(edges: DataFrame, max_iterations: int = 30,
         labeled = assign_int.join(
             d.withColumnRenamed("vid", "u"), "u").select("url", "v")
         reps = labeled.groupBy("v").agg(F.min("url").alias("cluster_id"))
-        return labeled.join(reps, "v").select("url", "cluster_id"), False
+        return labeled.join(reps, "v").select("url", "cluster_id")
 
     e = _propagate(e, max_iterations)
     # converged state: every edge points child -> component root
     children = e.select(F.col("u").alias("url"), F.col("v").alias("cluster_id"))
     roots = e.select(F.col("v").alias("url"),
                      F.col("v").alias("cluster_id")).distinct()
-    return children.unionByName(roots).distinct(), False
+    return children.unionByName(roots).distinct()
 
 
 def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
@@ -209,9 +209,10 @@ def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
     table; the full assignment is scanned once for the member pull and
     once for the anti-join pass-through — no full-graph CC rounds. The
     broadcast is SIZE-GATED by one driver step, the same gate as
-    `_components`: a bounded limit(broadcast_threshold + 1).collect() of
-    the touched ids. Under the gate the collected ids become a local
-    broadcast relation; a pathological drop touching more than
+    `connected_components`: a bounded limit(broadcast_threshold +
+    1).collect() of the touched ids. Under the gate the collected ids
+    become a local Arrow relation, which the planner broadcasts from its
+    exact size; a pathological drop touching more than
     `broadcast_threshold` clusters falls back to shuffle joins instead of
     blowing the driver/executor broadcast memory. Callers pass edges that
     are cheap to re-read (ingest_drop pins them): the gate and the
@@ -223,8 +224,8 @@ def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
                         .select("cluster_id").distinct())
     ids = touched_clusters.limit(broadcast_threshold + 1).collect()
     if len(ids) <= broadcast_threshold:
-        tc = F.broadcast(assignments.sparkSession.createDataFrame(
-            ids, touched_clusters.schema))
+        tc = _local_frame(assignments.sparkSession,
+                          cluster_id=[r[0] for r in ids])
     else:
         tc = touched_clusters
     affected = assignments.join(tc, "cluster_id")
@@ -241,19 +242,13 @@ def merge_assignments(assignments: DataFrame, new_edges: DataFrame,
 def assign_clusters(corpus_keys: DataFrame, edges: DataFrame,
                     max_iterations: int = 30) -> DataFrame:
     """All documents -> (url, cluster_id); documents with no duplicate edge
-    form singleton clusters keyed by their own url."""
-    comp, on_driver = _components(edges, max_iterations)
-    # a driver-built assignment is bounded by driver_threshold BY
-    # CONSTRUCTION, but it surfaces as a Python-RDD scan with unknown
-    # stats, which otherwise forces a sort-merge anti-join that shuffles
-    # and sorts the whole corpus key column. The hint sits on the join
-    # side only: on a frame that is also unioned it is not part of a join
-    # relation, and Spark logs a warning for it.
-    members = comp.select("url")
+    form singleton clusters keyed by their own url. A driver-built
+    component table is a local relation, so the singleton anti-join
+    broadcasts it instead of shuffling and sorting the corpus keys."""
+    comp = connected_components(edges, max_iterations)
     singletons = (
         corpus_keys.select("url")
-        .join(F.broadcast(members) if on_driver else members, "url",
-              "left_anti")
+        .join(comp.select("url"), "url", "left_anti")
         .select("url", F.col("url").alias("cluster_id"))
     )
     return comp.unionByName(singletons)

@@ -79,12 +79,15 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
     label pair provenance). Null key values form their own groups (null-safe
     joins throughout).
 
-    With `track_hot_keys`, returns the TUPLE (pairs, hot_keys) — hot_keys
-    is the persisted above-cap key table for the caller's capped-bucket
-    observability count (caller unpersists). An explicit tuple, not an
-    attribute on the DataFrame: an attribute silently vanishes on the
-    first .where/.select a caller applies (that exact bug broke the
-    engine-mode pipeline in round 5).
+    Building the plan runs one action on batch input: a count() of the
+    above-cap (hot) keys, which materializes the checkpointed key and
+    count tables below and skips the whole hot subplan when it reads 0.
+    With `track_hot_keys`, returns the TUPLE (pairs, n_hot) — n_hot is
+    that count, the caller's capped-bucket observability number (None on
+    streaming input, which cannot probe). Nothing is persisted for it. An
+    explicit tuple, not an attribute on the DataFrame: an attribute
+    silently vanishes on the first .where/.select a caller applies (that
+    exact bug broke the engine-mode pipeline in round 5).
 
     With `payload_col`, each member carries one scalar payload through the
     expansion and every emitted pair exposes both sides as (pa, pb) — this
@@ -135,11 +138,6 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
         counts = counts.localCheckpoint(eager=False)
     hot_keys = (counts.where(F.col("n") > cap).drop("n")
                 .withColumn("_hot", F.lit(True)))
-    if track_hot_keys:
-        # tiny by construction (only above-cap keys): cache it so the
-        # caller's capped-bucket observability count reuses the partials
-        # materialized by the main pair job instead of re-scanning
-        hot_keys = hot_keys.persist()
     # keys that can emit cold all-pairs: more than one member row, not hot
     eligible = counts.where((F.col("n") > 1) & (F.col("n") <= cap)).drop("n")
 
@@ -159,14 +157,15 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
                           F.explode(F.expr(expansion)).alias("p"))
                   .select(*key_cols, *pair_cols))
 
-    # Hot keys are the rare case (zero at typical bench scale); a bounded
-    # probe over the already-materialized counts skips the entire hot
-    # subplan (two more scans of m + a min aggregation) when there are
-    # none — the same data-dependent gate discipline cluster.py's driver
-    # threshold uses. Streaming inputs cannot probe and keep both
-    # branches.
-    has_hot = members.isStreaming or hot_keys.limit(1).count() > 0
-    if has_hot:
+    # Hot keys are the rare case (zero at typical bench scale); one count
+    # over the already-materialized counts skips the entire hot subplan
+    # (two more scans of m + a min aggregation) when there are none — the
+    # same data-dependent gate discipline cluster.py's driver threshold
+    # uses — and is the capped-bucket count callers record. count() ran
+    # one job fewer than limit(1).count() on synth_dense (3 against 4).
+    # Streaming inputs cannot probe and keep both branches.
+    n_hot = None if members.isStreaming else hot_keys.count()
+    if n_hot != 0:
         hot = _join_on_keys(m, hot_keys, key_cols, "inner").drop("_hot")
         if payload_col is not None:
             # min over (url, payload) structs == min url (payload is a
@@ -190,9 +189,7 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
     keep = ([*key_cols] if keep_keys else []) + ["a", "b"] + \
         (["pa", "pb"] if payload_col is not None else [])
     result = out.select(*keep)
-    if track_hot_keys:
-        return result, hot_keys
-    return result
+    return (result, n_hot) if track_hot_keys else result
 
 
 GROUP_KEY_COLS = ["gk_band", "gk_url", "gk_txt"]
@@ -288,42 +285,29 @@ def candidate_pairs(signatures: DataFrame,
     1.0 regardless of text, like the reference's short-circuit at
     app/hash_detector.py:263-266.
 
-    With `track_hot_keys`, returns (pairs, hot_keys) — see
+    With `track_hot_keys`, returns (pairs, n_hot) — see
     pairs_within_groups."""
+    # Engine mode: SimHash rides the key emission as a member payload so
+    # the Hamming gate runs INSIDE the pair-expansion codegen stage — the
+    # raw pair rows a boilerplate-heavy char-shingle banding emits
+    # (measured 17.4M at 100k docs vs 131k survivors) never reach the
+    # labeling aggregation's shuffle. url-key pair occurrences bypass the
+    # gate (url_exact scores 1.0 without a signature,
+    # app/hash_detector.py:263-266); a null simhash on either side fails
+    # the gate, exactly like the former join-based prefilter. NEVER
+    # applied in parity runs (the reference has no SimHash).
+    keys = unified_group_keys(signatures, cfg,
+                              with_simhash=use_simhash_prefilter)
+    tagged, n_hot = pairs_within_groups(
+        keys, GROUP_KEY_COLS, cfg.band_bucket_cap, keep_keys=True,
+        payload_col="simhash" if use_simhash_prefilter else None,
+        track_hot_keys=True)
     if use_simhash_prefilter:
-        # Engine mode: SimHash rides the key emission as a member payload
-        # so the Hamming gate runs INSIDE the pair-expansion codegen
-        # stage — the raw pair rows a boilerplate-heavy char-shingle
-        # banding emits (measured 17.4M at 100k docs vs 131k survivors)
-        # never reach the labeling aggregation's shuffle. url-key pair
-        # occurrences bypass the gate (url_exact scores 1.0 without a
-        # signature, app/hash_detector.py:263-266); a null simhash on
-        # either side fails the gate, exactly like the former join-based
-        # prefilter. NEVER applied in parity runs (the reference has no
-        # SimHash).
-        keys = unified_group_keys(signatures, cfg, with_simhash=True)
-        tagged = pairs_within_groups(keys, GROUP_KEY_COLS,
-                                     cfg.band_bucket_cap, keep_keys=True,
-                                     payload_col="simhash",
-                                     track_hot_keys=track_hot_keys)
-        if track_hot_keys:
-            tagged, hot_keys_df = tagged
-        else:
-            hot_keys_df = None
         tagged = (tagged.where(
             F.col("gk_url").isNotNull()
             | (F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))
                <= cfg.simhash_hamming_max))
             .drop("pa", "pb"))
-    else:
-        keys = unified_group_keys(signatures, cfg)
-        tagged = pairs_within_groups(keys, GROUP_KEY_COLS,
-                                     cfg.band_bucket_cap, keep_keys=True,
-                                     track_hot_keys=track_hot_keys)
-        if track_hot_keys:
-            tagged, hot_keys_df = tagged
-        else:
-            hot_keys_df = None
     # provenance priority mirrors the reference's field order (url exact
     # short-circuits, hash bands are the signature path, title and
     # description-prefix searches are the metadata recall paths)
@@ -336,6 +320,4 @@ def candidate_pairs(signatures: DataFrame,
                     .when(F.col("_band"), F.lit("lsh"))
                     .when(F.col("_title"), F.lit("title"))
                     .otherwise(F.lit("description")).alias("match_source")))
-    if track_hot_keys:
-        return result, hot_keys_df
-    return result
+    return (result, n_hot) if track_hot_keys else result

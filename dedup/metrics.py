@@ -21,19 +21,25 @@ import json
 import urllib.request
 
 
-def rest_stage_metrics(spark, timeout: float = 5.0) -> list[dict] | None:
-    """All COMPLETE stages' metrics for this application, or None when the
-    UI/REST server is off."""
+def rest_json(spark, path: str, timeout: float = 5.0):
+    """GET <uiWebUrl>/api/v1/applications/<appId>/<path> as JSON, or None
+    when the UI/REST server is off or unreachable."""
     base = spark.sparkContext.uiWebUrl
     if not base:
         return None
     app_id = spark.sparkContext.applicationId
-    url = f"{base}/api/v1/applications/{app_id}/stages?status=complete"
+    url = f"{base}/api/v1/applications/{app_id}/{path}"
     try:
         with urllib.request.urlopen(url, timeout=timeout) as r:
             return json.loads(r.read())
     except Exception:
         return None
+
+
+def rest_stage_metrics(spark, timeout: float = 5.0) -> list[dict] | None:
+    """All COMPLETE stages' metrics for this application, or None when the
+    UI/REST server is off."""
+    return rest_json(spark, "stages?status=complete", timeout)
 
 
 def stage_ids(stages: list[dict] | None) -> set[int]:

@@ -12,8 +12,15 @@ construction as the reference's detection-cache key, app/main.py:207-225).
 A stage whose manifest matches the current job key is SKIPPED on resume and
 its table is read back — resume-from-failure therefore costs only the stages
 after the last completed checkpoint. Lineage lives in
-`workdir/_lineage/<stage>.json`; per-partition row counts and wall times go
-to the `metrics` table (`workdir/metrics/`).
+`workdir/_lineage/<stage>.json`; per-part row counts and wall times go to
+the `metrics` table (`workdir/metrics/`).
+
+Bookkeeping rides the write and launches no Spark job in path mode: row
+counts come from the footers of the part files the stage write produced,
+one metrics row per written file; the metrics rows are one Arrow table
+written from the driver; the stage table is read back with the schema of
+the frame that was written. Every job a stage runs carries the job tag
+`dedup-stage:<stage>`.
 
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
 groupBy, pair join, label-prop iterations), so checkpoints double as shuffle
@@ -29,7 +36,9 @@ import time
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from dedup.cluster import assign_clusters
 from dedup.config import DedupConfig
@@ -41,6 +50,16 @@ from dedup.verify import verify_pairs
 STAGES = ("signatures", "pairs", "verified", "clusters")
 # optional stages that only exist when requested (still invalidated)
 OPTIONAL_STAGES = ("keys",)
+# one row per written part file of a computed stage
+METRICS_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()), ("rows", pa.int64()),
+    ("stage", pa.string()), ("job_key", pa.string()),
+    ("wall_ms", pa.float64()), ("executor_run_time_ms", pa.int64()),
+    ("shuffle_read_bytes", pa.int64()), ("shuffle_write_bytes", pa.int64()),
+    ("num_tasks", pa.int64()), ("n_capped_buckets", pa.int64())])
+METRICS_SPARK_SCHEMA = from_arrow_schema(METRICS_SCHEMA)
+_TELEMETRY = ("executor_run_time_ms", "shuffle_read_bytes",
+              "shuffle_write_bytes", "num_tasks")
 
 
 @dataclass
@@ -109,45 +128,32 @@ class DedupPipeline:
             "finished_at": time.time(),
         }, indent=2))
 
-    def _record_metrics(self, stage: str, df: DataFrame, wall_ms: float,
+    def _record_metrics(self, stage: str, counts: list[int], wall_ms: float,
                         task_totals: dict | None,
-                        n_capped_buckets: int | None = None
-                        ) -> tuple[int, int]:
-        """Per-partition lineage rows -> metrics table; returns (rows, parts).
-
-        One scan: the per-partition counts are collected (tiny — one row per
-        partition) and the metrics parquet + totals come from that list, not
-        from re-scanning the stage output. Task-level telemetry (executor
-        run time, shuffle read/write bytes from the monitoring REST API —
-        M12) rides along on every row when available, null otherwise.
-        `n_capped_buckets` (pairs stage only) records how many blocking
-        buckets exceeded band_bucket_cap and emitted star edges — the 'no
-        silent caps' counter; null on stages without a cap."""
-        counts = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-        ).collect()
-        rows = sum(r["rows"] for r in counts)
+                        n_capped_buckets: int | None = None) -> None:
+        """Per-part lineage rows -> metrics table, one row per written part
+        file with its footer row count (`Storage.part_row_counts`), appended
+        from the driver as one Arrow table: no Spark job in path mode.
+        Task-level telemetry (executor run time, shuffle read/write bytes
+        from the monitoring REST API — M12) rides along on every row when
+        available, null otherwise. `n_capped_buckets` (pairs stage only)
+        records how many blocking buckets exceeded band_bucket_cap and
+        emitted star edges — the 'no silent caps' counter; null on stages
+        without a cap."""
         tt = task_totals or {}
-        telemetry = (tt.get("executor_run_time_ms"),
-                     tt.get("shuffle_read_bytes"),
-                     tt.get("shuffle_write_bytes"),
-                     tt.get("num_tasks"))
-        metrics = self.spark.createDataFrame(
-            [(int(r["partition_id"]), int(r["rows"]), stage, self.job_key,
-              float(wall_ms), *telemetry, n_capped_buckets)
-             for r in counts] or
-            [(0, 0, stage, self.job_key, float(wall_ms), *telemetry,
-              n_capped_buckets)],
-            "partition_id int, rows long, stage string, job_key string, "
-            "wall_ms double, executor_run_time_ms long, "
-            "shuffle_read_bytes long, shuffle_write_bytes long, "
-            "num_tasks long, n_capped_buckets long")
-        self.storage.write_table(metrics.coalesce(1),
-                                 self._stage_ref("metrics"), mode="append")
-        return rows, max(1, len(counts))
+        rows = [{"partition_id": i, "rows": n, "stage": stage,
+                 "job_key": self.job_key, "wall_ms": float(wall_ms),
+                 **{k: tt.get(k) for k in _TELEMETRY},
+                 "n_capped_buckets": n_capped_buckets}
+                for i, n in enumerate(counts or [0])]
+        self.storage.append_rows(
+            pa.Table.from_pylist(rows, schema=METRICS_SCHEMA),
+            self._stage_ref("metrics"))
 
-    def _run_stage(self, stage: str, build, capped_fn=None) -> DataFrame:
+    def _run_stage(self, stage: str, build) -> DataFrame:
+        """Build and write one stage, or read it back when a resumable
+        checkpoint exists. `build` returns the stage frame, or (frame,
+        n_capped_buckets) for the pairs stage."""
         from dedup.metrics import rest_stage_metrics, stage_ids, task_totals
 
         ref = self._stage_ref(stage)
@@ -155,19 +161,28 @@ class DedupPipeline:
             df = self.storage.read_table(ref)
             self.stage_infos.append(StageInfo(stage, True, -1, 0.0))
             return df
+        sc = self.spark.sparkContext
+        tag = f"dedup-stage:{stage}"
         before = stage_ids(rest_stage_metrics(self.spark))
         t0 = time.monotonic()
-        built = build()
-        self.storage.write_table(built, ref)
-        wall_ms = (time.monotonic() - t0) * 1000
-        totals = task_totals(rest_stage_metrics(self.spark), before)
-        df = self.storage.read_table(ref)
-        capped = capped_fn(built) if capped_fn is not None else None
-        rows, parts = self._record_metrics(stage, df, wall_ms, totals,
-                                           n_capped_buckets=capped)
-        self._write_manifest(stage, rows, wall_ms, parts)
+        # a tag, not a job group: callers (perfbench's spans) attribute
+        # jobs by group id, and a group set here would replace theirs
+        sc.addJobTag(tag)
+        try:
+            built = build()
+            built, capped = (built if isinstance(built, tuple)
+                             else (built, None))
+            self.storage.write_table(built, ref)
+            wall_ms = (time.monotonic() - t0) * 1000
+            totals = task_totals(rest_stage_metrics(self.spark), before)
+            counts = self.storage.part_row_counts(ref)
+        finally:
+            sc.removeJobTag(tag)
+        self._record_metrics(stage, counts, wall_ms, totals, capped)
+        rows = sum(counts)
+        self._write_manifest(stage, rows, wall_ms, max(1, len(counts)))
         self.stage_infos.append(StageInfo(stage, False, rows, wall_ms))
-        return df
+        return self.storage.read_table(ref, schema=built.schema)
 
     def invalidate(self) -> None:
         """Explicit checkpoint invalidation — the engine analog of the
@@ -213,33 +228,12 @@ class DedupPipeline:
                 .repartitionByRange(self.cfg.shuffle_partitions,
                                     "gk_band", "gk_url", "gk_txt")
                 .sortWithinPartitions("gk_band", "gk_url", "gk_txt"))
-        hot_holder: list = []
-
-        def build_pairs():
-            pairs_df, hot = candidate_pairs(
-                signatures, self.cfg,
-                use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
-                track_hot_keys=True)
-            hot_holder.append(hot)
-            return pairs_df
-
-        def count_capped(_built):
-            # reuse the hot-key table the pair job just materialized
-            # (persisted, tiny: above-cap keys only) — the observability
-            # count costs a cached-table scan, not a second key-emission
-            # pass over signatures
-            if not hot_holder:
-                return None
-            hot = hot_holder.pop()
-            n = hot.count()
-            hot.unpersist()
-            return n
-
         pairs = self._run_stage(
             "pairs",
-            build_pairs,
-            capped_fn=count_capped,
-        )
+            lambda: candidate_pairs(
+                signatures, self.cfg,
+                use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
+                track_hot_keys=True))
         verified = self._run_stage(
             "verified", lambda: verify_pairs(pairs, signatures, self.cfg))
         clusters = self._run_stage(
@@ -255,7 +249,7 @@ class DedupPipeline:
             "verified": verified,
             "clusters": clusters,
             "metrics": self.storage.read_table(self._stage_ref("metrics"),
-                                               merge_schema=True),
+                                               schema=METRICS_SPARK_SCHEMA),
         }
         if keys is not None:
             out["keys"] = keys

@@ -823,6 +823,27 @@ def q_simhash_hamming(spark, sf_dir):
 
 # --- embeddings ------------------------------------------------------------------
 
+def _knn_fold(vs: pd.Series, Q: np.ndarray) -> pd.DataFrame:
+    """Dots of each embedding with every query row of Q, plus its own norm,
+    folded left to right like the SQL aggregate (bit-equal). A NULL
+    embedding gets NULL dots and norm, so its cosines are NULL, as the SQL
+    fold gave; an empty batch gives an empty frame."""
+    valid = vs.notna().to_numpy()
+    M = (np.stack(vs[valid].to_numpy()) if valid.any()
+         else np.empty((0, Q.shape[1]))).astype(np.float64, copy=False)
+    dots = np.zeros((M.shape[0], Q.shape[0]), dtype=np.float64)
+    nsq = np.zeros(M.shape[0], dtype=np.float64)
+    for j in range(Q.shape[1]):   # left fold, bit-equal to aggregate()
+        col = M[:, j]
+        dots += col[:, None] * Q[None, :, j]
+        nsq += col * col
+    nv = np.full(len(vs), np.nan)
+    nv[valid] = np.sqrt(nsq)
+    rows, null_dots = iter(dots), [None] * Q.shape[0]
+    return pd.DataFrame({"dots": [next(rows) if ok else null_dots
+                                  for ok in valid], "nv": nv})
+
+
 def q_embedding_knn(spark, sf_dir):
     """Brute-force cosine top-5 neighbors for query vectors vec_id < 5
     (ANN baseline). Sequential-fold dot product in double precision.
@@ -861,15 +882,7 @@ def q_embedding_knn(spark, sf_dir):
 
     @F.pandas_udf("struct<dots: array<double>, nv: double>")
     def knn_scores(vs: pd.Series) -> pd.DataFrame:
-        M = np.stack(vs.to_numpy()).astype(np.float64, copy=False)
-        n = M.shape[0]
-        dots = np.zeros((n, Q.shape[0]), dtype=np.float64)
-        nsq = np.zeros(n, dtype=np.float64)
-        for j in range(Q.shape[1]):   # left fold, bit-equal to aggregate()
-            col = M[:, j]
-            dots += col[:, None] * Q[None, :, j]
-            nsq += col * col
-        return pd.DataFrame({"dots": list(dots), "nv": np.sqrt(nsq)})
+        return _knn_fold(vs, Q)
 
     qid_lit = F.array(*[F.lit(q).cast("bigint") for q in qids])
     qn_lit = F.array(*[F.lit(x) for x in qnorms])

@@ -10,7 +10,10 @@ Iceberg's snapshot/partition metadata; in this sandbox (no Iceberg jar) the
 default path-mode writes parquet directories with identical schemas.
 
 Refs:
-- path mode:     ref is a filesystem/objectstore path ("/work/signatures")
+- path mode:     ref is a directory the driver can reach through its own
+                 file API ("/work/signatures": local disk or a mount) —
+                 completion markers, part-file footers and metrics appends
+                 are read and written on the driver
 - catalog mode:  ref is "db.table" under the configured catalog
 
 The reference service has no storage at all (all corpus data lives behind a
@@ -19,11 +22,16 @@ replacement (S1: HTTP session -> table scan)."""
 
 from __future__ import annotations
 
+import os
 import shutil
+import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -57,19 +65,53 @@ class Storage:
         return f"{self.config.catalog}.{ref}"
 
     # --- interface --------------------------------------------------------
-    def read_table(self, ref: str, merge_schema: bool = False) -> DataFrame:
-        """merge_schema: for append-mode tables whose row schema can GROW
-        across code versions (e.g. metrics gaining columns): plain parquet
-        reads resolve the schema from one arbitrary footer, so a workdir
-        mixing old and new files would nondeterministically drop the new
-        columns; mergeSchema unions footers (old files read as NULLs).
-        Catalog (Iceberg) tables evolve schema in the catalog instead."""
+    def read_table(self, ref: str,
+                   schema: StructType | None = None) -> DataFrame:
+        """Path mode with a `schema`: a declared-schema parquet read, which
+        plans without a Spark job (inferring the schema launches one to read
+        footers). Columns the declared schema has and an older file lacks
+        read as NULL, so append-mode tables whose row schema GROWS across
+        code versions (metrics gaining columns) read back whole — a plain
+        inferring read resolves the schema from one arbitrary footer and
+        could drop the new columns. Catalog (Iceberg) tables carry and
+        evolve their schema in the catalog, so `schema` is not used there."""
         if self.config.catalog:
             return self.spark.read.table(self._qualified(ref))
         reader = self.spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(ref)
+
+    def append_rows(self, table: pa.Table, ref: str) -> None:
+        """Append a few driver-held rows (one stage's metrics) without a
+        Python-RDD round trip. Path mode writes one parquet file from the
+        driver, atomically: under a `.`-prefixed name that readers skip,
+        then `os.replace` to its final name, so a reader never sees a torn
+        file. Catalog mode appends `createDataFrame(table)`, a local
+        relation."""
+        if self.config.catalog:
+            self.write_table(self.spark.createDataFrame(table), ref,
+                             mode="append")
+            return
+        Path(ref).mkdir(parents=True, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = Path(ref, f".{name}")
+        pq.write_table(table, tmp)
+        os.replace(tmp, Path(ref, name))
+
+    def part_row_counts(self, ref: str) -> list[int]:
+        """Row count of each part of a table, in part order. Path mode reads
+        the footers of the parquet part files the last write produced: no
+        Spark job, no data scan. Catalog mode runs one count scan grouped by
+        Spark partition; an Iceberg catalog could read its `files` metadata
+        table instead, but no Iceberg runtime is available to test that."""
+        if self.config.catalog:
+            return [r["n"] for r in (
+                self.read_table(ref)
+                .groupBy(F.spark_partition_id().alias("p"))
+                .agg(F.count(F.lit(1)).alias("n")).orderBy("p").collect())]
+        return [pq.ParquetFile(f).metadata.num_rows
+                for f in sorted(Path(ref).glob("part-*.parquet"))]
 
     def _ensure_namespace(self, ref: str) -> None:
         if "." in ref:
@@ -101,8 +143,8 @@ class Storage:
         columns via ALTER TABLE before appending — both the V1 saveAsTable
         and the V2 writeTo append raise AnalysisException on a wider
         frame, which would kill resume of a pre-change workdir at its
-        first metrics write. The path-storage analog is read_table's
-        merge_schema."""
+        first metrics write. The path-storage analog is read_table with
+        the declared schema."""
         if not self.spark.catalog.tableExists(q):
             return
         existing = {f.name.lower()

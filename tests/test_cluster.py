@@ -154,3 +154,38 @@ def test_merge_assignments_size_gate_fallback(spark):
                      for r in merge_assignments(base, bridges).collect()}
     assert got_fallback == want
     assert got_broadcast == want
+
+
+def _executed_plans(df) -> str:
+    """Analyzed logical plan + executed physical plan, after a collect."""
+    df.collect()
+    qe = df._jdf.queryExecution()
+    return f"{qe.analyzed().toString()}\n{qe.executedPlan().toString()}"
+
+
+def test_driver_built_frames_plan_as_local_relations(spark, tmp_path):
+    """The driver union-find assignment and merge_assignments' gated
+    cluster ids enter the plan as local Arrow relations, never as Python-RDD
+    scans; the p4 singleton anti-join still broadcasts them unhinted."""
+    from dedup.cluster import merge_assignments
+    from dedup.config import PARITY_CONFIG
+    from dedup.pipeline import dedupe_corpus
+    from dedup.synth import write_corpus
+
+    corpus_path = str(tmp_path / "corpus")
+    write_corpus(spark, corpus_path, n_docs=80, seed=9)
+    tables = dedupe_corpus(spark, spark.read.parquet(corpus_path),
+                           str(tmp_path / "wd"), PARITY_CONFIG)
+    # p4 exactly as the pipeline builds it, over the persisted stage tables
+    edges = tables["verified"].where("keep").select("a", "b")
+    assert edges.count() > 0
+    clusters = assign_clusters(tables["extracted"].select("url"), edges)
+    plan = _executed_plans(clusters)
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    assert "LocalRelation" in plan or "LocalTableScan" in plan, plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+
+    merged = merge_assignments(tables["clusters"], edges.limit(3))
+    plan = _executed_plans(merged)
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+    assert "LocalRelation" in plan or "LocalTableScan" in plan, plan

@@ -76,33 +76,6 @@ def test_semantic_dedup_survives_zero_vectors(spark, zero_vec_sf_dir):
     assert all(keep for _, _, keep, _ in zero_rows)
 
 
-def test_pipeline_metrics_record_capped_buckets(spark, tmp_path):
-    """'No silent caps': the pairs-stage metrics rows must carry how many
-    blocking buckets exceeded band_bucket_cap (star-edge degradation),
-    null on stages without a cap (VERDICT r4 #5)."""
-    from dataclasses import replace
-
-    from dedup.config import PARITY_CONFIG
-    from dedup.pipeline import dedupe_corpus
-    from dedup.synth import corpus_pdf
-
-    corpus = spark.createDataFrame(
-        corpus_pdf(80, seed=11, hot_frac=0.5)[
-            ["url", "warc_ts", "html", "text", "lang"]])
-    cfg = replace(PARITY_CONFIG, band_bucket_cap=1)  # any 2-member bucket
-    tables = dedupe_corpus(spark, corpus, str(tmp_path / "wd"), cfg)
-    m = tables["metrics"]
-    assert "n_capped_buckets" in m.columns
-    pairs_vals = {r["n_capped_buckets"]
-                  for r in m.where("stage = 'pairs'").collect()}
-    assert len(pairs_vals) == 1
-    capped = pairs_vals.pop()
-    assert capped is not None and capped >= 1  # hot boilerplate bucket
-    other_vals = {r["n_capped_buckets"]
-                  for r in m.where("stage != 'pairs'").collect()}
-    assert other_vals == {None}
-
-
 def test_semantic_dedup_reports_capped_cells(spark):
     """semantic_dedup_frame's accumulator counts cells above the cap once
     the result materializes; tail rows still pass through keep=true."""
@@ -280,78 +253,6 @@ def test_cluster_representatives_match_live_replica(spark):
            for r in q_cluster_representatives(spark, SF).collect()}
     assert want, "replica produced no non-singleton clusters — vacuous test"
     assert got == want
-
-
-def test_engine_mode_pipeline_tracks_capped_buckets(spark, tmp_path):
-    """Regression: scoring='jaccard' routes candidate_pairs through the
-    SimHash-prefilter branch, whose gate REASSIGNS the tagged DataFrame —
-    the hot-keys frame must be captured before that, or the pairs stage
-    dies with AttributeError and the whole engine-mode batch pipeline is
-    broken (round-5 review finding)."""
-    from dataclasses import replace
-
-    from dedup.config import ENGINE_CONFIG
-    from dedup.pipeline import dedupe_corpus
-    from dedup.synth import corpus_pdf
-
-    corpus = spark.createDataFrame(
-        corpus_pdf(60, seed=13, hot_frac=0.4)[
-            ["url", "warc_ts", "html", "text", "lang"]])
-    cfg = replace(ENGINE_CONFIG, band_bucket_cap=1)
-    tables = dedupe_corpus(spark, corpus, str(tmp_path / "wd"), cfg)
-    pairs_vals = {r["n_capped_buckets"]
-                  for r in tables["metrics"].where("stage = 'pairs'").collect()}
-    assert len(pairs_vals) == 1
-    capped = pairs_vals.pop()
-    assert capped is not None and capped >= 1
-    assert tables["clusters"].count() > 0
-
-
-def test_metrics_read_merges_grown_schema(spark, tmp_path):
-    """A workdir whose metrics table mixes pre-n_capped_buckets files with
-    new ones must read back with the full merged schema (plain parquet
-    reads resolve from one arbitrary footer)."""
-    from dedup.storage import Storage, StorageConfig
-
-    st = Storage(spark, StorageConfig(catalog=None))
-    old = spark.createDataFrame(
-        [(0, 5, "pairs", "k", 1.0)],
-        "partition_id int, rows long, stage string, job_key string, "
-        "wall_ms double")
-    new = spark.createDataFrame(
-        [(0, 5, "pairs", "k", 1.0, 3)],
-        "partition_id int, rows long, stage string, job_key string, "
-        "wall_ms double, n_capped_buckets long")
-    ref = str(tmp_path / "metrics")
-    st.write_table(old.coalesce(1), ref, mode="append")
-    st.write_table(new.coalesce(1), ref, mode="append")
-    m = st.read_table(ref, merge_schema=True)
-    assert "n_capped_buckets" in m.columns
-    vals = {r["n_capped_buckets"] for r in m.collect()}
-    assert vals == {None, 3}
-
-
-def test_task_totals_keeps_latest_stage_attempt():
-    """A retried stage appears as two attempt entries in /stages; only the
-    latest attempt's telemetry may count (round-5 review finding)."""
-    from dedup.metrics import task_totals
-
-    stages = [
-        {"stageId": 1, "attemptId": 0, "executorRunTime": 100,
-         "numTasks": 8, "shuffleReadBytes": 10, "shuffleWriteBytes": 5,
-         "inputBytes": 1},
-        {"stageId": 1, "attemptId": 1, "executorRunTime": 120,
-         "numTasks": 8, "shuffleReadBytes": 12, "shuffleWriteBytes": 6,
-         "inputBytes": 2},
-        {"stageId": 2, "attemptId": 0, "executorRunTime": 50,
-         "numTasks": 4, "shuffleReadBytes": 0, "shuffleWriteBytes": 0,
-         "inputBytes": 0},
-    ]
-    t = task_totals(stages)
-    assert t["n_spark_stages"] == 2
-    assert t["executor_run_time_ms"] == 170  # 120 (latest) + 50, not 270
-    assert t["num_tasks"] == 12
-    assert task_totals(stages, exclude_ids={1})["executor_run_time_ms"] == 50
 
 
 def test_build_ivf_index_refuses_empty_table(spark, tmp_path):

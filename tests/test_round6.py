@@ -55,35 +55,77 @@ def test_line_dedup_matches_r5_formulation(spark):
     _exact_same(old_line_dedup(spark, SF), q_line_dedup(spark, SF))
 
 
+def _old_knn(spark, sf_dir):
+    """q_embedding_knn's r5 formulation: an interpreted aggregate() fold
+    per (query, vector) pair of a crossJoin."""
+    from pyspark.sql import Window
+    from dedup.queries import _emb
+
+    e = _emb(spark, sf_dir).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
+    q = (e.where("vec_id < 5")
+         .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")))
+    dot = F.expr("aggregate(zip_with(qv, v, (x, y) -> x * y), "
+                 "cast(0.0 as double), (acc, x) -> acc + x)")
+    norm = ("sqrt(aggregate(transform({0}, x -> x * x), "
+            "cast(0.0 as double), (acc, x) -> acc + x))")
+    cos = F.try_divide(dot, F.expr(norm.format("qv"))
+                       * F.expr(norm.format("v")))
+    scored = (q.crossJoin(e).where(F.col("qid") != F.col("vec_id"))
+              .select("qid", "vec_id", cos.alias("cos")))
+    w = Window.partitionBy("qid").orderBy(F.desc("cos"), F.asc("vec_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where("rank <= 5")
+            .select("qid", "vec_id",
+                    F.col("rank").cast("bigint").alias("rank"),
+                    F.round("cos", 6).alias("cos_sim")))
+
+
 def test_embedding_knn_matches_r5_formulation(spark):
     # the r6 rewrite ships each vector over Arrow once and folds dots in a
     # vectorized column loop; scores must stay bit-identical to the old
     # interpreted aggregate() fold (the driver hashes rounded doubles)
-    from pyspark.sql import Window
-    from dedup.queries import _emb, q_embedding_knn
+    from dedup.queries import q_embedding_knn
 
-    def old_knn(spark, sf_dir):
-        e = _emb(spark, sf_dir).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        q = (e.where("vec_id < 5")
-             .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv")))
-        dot = F.expr("aggregate(zip_with(qv, v, (x, y) -> x * y), "
-                     "cast(0.0 as double), (acc, x) -> acc + x)")
-        norm = ("sqrt(aggregate(transform({0}, x -> x * x), "
-                "cast(0.0 as double), (acc, x) -> acc + x))")
-        cos = F.try_divide(dot, F.expr(norm.format("qv"))
-                           * F.expr(norm.format("v")))
-        scored = (q.crossJoin(e).where(F.col("qid") != F.col("vec_id"))
-                  .select("qid", "vec_id", cos.alias("cos")))
-        w = Window.partitionBy("qid").orderBy(F.desc("cos"),
-                                              F.asc("vec_id"))
-        return (scored.withColumn("rank", F.row_number().over(w))
-                .where("rank <= 5")
-                .select("qid", "vec_id",
-                        F.col("rank").cast("bigint").alias("rank"),
-                        F.round("cos", 6).alias("cos_sim")))
+    _exact_same(_old_knn(spark, SF), q_embedding_knn(spark, SF))
 
-    _exact_same(old_knn(spark, SF), q_embedding_knn(spark, SF))
+
+def test_knn_fold_guards_empty_and_null_batches():
+    # an empty Arrow batch yields an empty frame instead of np.stack
+    # raising; a NULL embedding yields NULL dots and norm
+    import pandas as pd
+
+    from dedup.queries import _knn_fold
+
+    Q = np.array([[1.0, 2.0], [0.5, -1.0]])
+    empty = _knn_fold(pd.Series([], dtype=object), Q)
+    assert list(empty.columns) == ["dots", "nv"] and len(empty) == 0
+    out = _knn_fold(pd.Series([np.array([3.0, 4.0]), None]), Q)
+    assert list(out["dots"][0]) == [11.0, -2.5] and out["nv"][0] == 5.0
+    assert list(out["dots"][1]) == [None, None]
+    assert np.isnan(out["nv"][1])
+
+
+def test_embedding_knn_null_embedding_scores_null(spark, tmp_path):
+    # a NULL embedding row ranks with a NULL cosine, exactly as the SQL
+    # fold scored it, instead of failing the query
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dedup.queries import q_embedding_knn
+
+    rng = np.random.RandomState(3)
+    vecs = [list(rng.randn(8)) for _ in range(3)] + [None]
+    pq.write_table(pa.table({
+        "vec_id": pa.array([0, 1, 2, 7], pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32()))}),
+        tmp_path / "embeddings.parquet")
+    sf = str(tmp_path)
+    got = q_embedding_knn(spark, sf)
+    _exact_same(_old_knn(spark, sf), got)
+    nulls = {(r["qid"], r["vec_id"]) for r in got.collect()
+             if r["cos_sim"] is None}
+    assert nulls == {(0, 7), (1, 7), (2, 7)}
 
 
 def test_knn_fold_is_bit_exact_vs_interpreted_fold():
