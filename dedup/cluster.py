@@ -8,14 +8,15 @@ Components in MapReduce and Beyond", SoCC'14): converges in O(log n) rounds,
 every round is two shuffles, and lineage is truncated with localCheckpoint
 each round so plans don't grow unboundedly.
 
-Vertex ids are the document keys (strings); min() over the natural string
-ordering picks each component's canonical representative. The distributed
-path first DENSE-ENCODES urls to int64 (xxhash64 with a collision check and
-seed rotation) so every propagation round shuffles 8-byte ids instead of
-~100 B-2 KB URL strings — at 10^12 docs the string width dominates CC cost.
-Components are propagated over the int64 graph and the canonical min-URL
-representative is recovered afterwards by one decode join + per-component
-min, so results are IDENTICAL to the string path (equality-tested)."""
+Vertex keys are the document urls; min() over the natural string ordering
+picks each component's canonical representative. The distributed path
+DENSE-ENCODES urls to int64 first (monotonically_increasing_id over the
+distinct vertices: unique by construction, so no collision check) so every
+propagation round shuffles 8-byte ids instead of ~100 B-2 KB URL strings —
+at 10^12 docs the string width dominates CC cost. Components are
+propagated over the int64 graph and the canonical min-URL representative is
+recovered afterwards by one decode join + per-component min, so results
+equal the driver union-find's (equality-tested)."""
 
 from __future__ import annotations
 
@@ -67,7 +68,7 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
 
 def _propagate(e: DataFrame, max_iterations: int) -> DataFrame:
     """Alternating large-star/small-star to convergence; returns the
-    converged child -> component-root edge set. Id-type agnostic."""
+    converged child -> component-root edge set."""
     e = e.localCheckpoint(eager=True)
     prev = _checksum(e)
     for _ in range(max_iterations):
@@ -80,24 +81,16 @@ def _propagate(e: DataFrame, max_iterations: int) -> DataFrame:
         f"connected_components did not converge in {max_iterations} rounds")
 
 
-def _encode_vertices(e: DataFrame) -> DataFrame | None:
-    """url -> collision-free int64 dictionary over the edge vertices, or
-    None if three seeds in a row collide (fall back to the string path).
-    One xxhash64 per vertex; the check is a single count/countDistinct agg.
-    P(collision) ~ n^2/2^64 per seed, so the rotation is a formality —
-    but silent collisions would merge unrelated clusters, so it's checked."""
-    verts = (e.select(F.col("u").alias("url"))
-             .unionByName(e.select(F.col("v").alias("url")))
-             .distinct())
-    for seed in (42, 43, 44):
-        d = (verts.select(
-            "url", F.xxhash64(F.lit(seed), "url").alias("vid"))
+def _encode_vertices(e: DataFrame) -> DataFrame:
+    """(url, vid) over the distinct edge vertices. monotonically_increasing_id
+    numbers them uniquely by construction; it is not deterministic across
+    recomputation, so the dictionary is checkpointed eagerly and every
+    join reads the same ids."""
+    return (e.select(F.col("u").alias("url"))
+            .unionByName(e.select(F.col("v").alias("url")))
+            .distinct()
+            .select("url", F.monotonically_increasing_id().alias("vid"))
             .localCheckpoint(eager=True))
-        row = d.agg(F.count(F.lit(1)).alias("n"),
-                    F.countDistinct("vid").alias("nd")).first()
-        if row["n"] == row["nd"]:
-            return d
-    return None
 
 
 def _local_frame(spark, **cols: list[str]) -> DataFrame:
@@ -110,8 +103,7 @@ def _local_frame(spark, **cols: list[str]) -> DataFrame:
 
 
 def connected_components(edges: DataFrame, max_iterations: int = 30,
-                         driver_threshold: int = 200_000,
-                         encode_ids: bool = True) -> DataFrame:
+                         driver_threshold: int = 200_000) -> DataFrame:
     """edges(a, b) -> assignments(url, cluster_id).
 
     cluster_id is the component's minimum vertex id. Only vertices that
@@ -131,11 +123,10 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
     Spark ships it as an RDD scan instead, and joins against it fall back
     to the planner's default strategy.
 
-    The distributed path propagates over a dense int64 vertex encoding by
-    default (see module docstring; encode_ids=False keeps the string
-    path). The component set is identical either way, and the cluster_id
-    is recomputed as the component-minimum URL after decoding, so outputs
-    match the string path exactly.
+    The distributed path propagates over a dense int64 vertex encoding
+    (see module docstring); the cluster_id is recomputed as the
+    component-minimum URL after decoding, so both paths return the same
+    assignment.
     """
     e = (edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
          .where(F.col("u") != F.col("v")).distinct())
@@ -163,28 +154,20 @@ def connected_components(edges: DataFrame, max_iterations: int = 30,
     elif e.isEmpty():
         return _local_frame(spark, url=[], cluster_id=[])
 
-    d = _encode_vertices(e) if encode_ids else None
-    if d is not None:
-        da = d.select(F.col("url").alias("u"), F.col("vid").alias("_ua"))
-        db = d.select(F.col("url").alias("v"), F.col("vid").alias("_vb"))
-        ei = (e.join(da, "u").join(db, "v")
-              .select(F.col("_ua").alias("u"), F.col("_vb").alias("v")))
-        ei = _propagate(ei, max_iterations)
-        # converged: child vid -> root vid; roots are their own parents
-        assign_int = (ei.unionByName(
-            ei.select(F.col("v").alias("u"), F.col("v").alias("v")))
-            .distinct())
-        labeled = assign_int.join(
-            d.withColumnRenamed("vid", "u"), "u").select("url", "v")
-        reps = labeled.groupBy("v").agg(F.min("url").alias("cluster_id"))
-        return labeled.join(reps, "v").select("url", "cluster_id")
-
-    e = _propagate(e, max_iterations)
-    # converged state: every edge points child -> component root
-    children = e.select(F.col("u").alias("url"), F.col("v").alias("cluster_id"))
-    roots = e.select(F.col("v").alias("url"),
-                     F.col("v").alias("cluster_id")).distinct()
-    return children.unionByName(roots).distinct()
+    d = _encode_vertices(e)
+    da = d.select(F.col("url").alias("u"), F.col("vid").alias("_ua"))
+    db = d.select(F.col("url").alias("v"), F.col("vid").alias("_vb"))
+    ei = (e.join(da, "u").join(db, "v")
+          .select(F.col("_ua").alias("u"), F.col("_vb").alias("v")))
+    ei = _propagate(ei, max_iterations)
+    # converged: child vid -> root vid; roots are their own parents
+    assign_int = (ei.unionByName(
+        ei.select(F.col("v").alias("u"), F.col("v").alias("v")))
+        .distinct())
+    labeled = assign_int.join(
+        d.withColumnRenamed("vid", "u"), "u").select("url", "v")
+    reps = labeled.groupBy("v").agg(F.min("url").alias("cluster_id"))
+    return labeled.join(reps, "v").select("url", "cluster_id")
 
 
 def merge_assignments(assignments: DataFrame, new_edges: DataFrame,

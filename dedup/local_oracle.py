@@ -514,6 +514,8 @@ def local_ivf_pairs(vec_rows, cos_min: float, bucket_cap: int,
     cent = [i for i, vid in enumerate(ids) if vid % centroid_mod == 0]
     cent.sort(key=lambda i: ids[i])
     C = M[cent]
+    # drop centroids equal to an earlier one, as semantic_dedup_frame does
+    C = C[np.sort(np.unique(C, axis=0, return_index=True)[1])]
     Cn = _unit_rows(C)
     Mn = _unit_rows(M)
     sims = Mn @ Cn.T
@@ -651,6 +653,8 @@ def local_semantic_dedup(vec_rows, t: float, cell_cap: int,
     cent = [i for i, vid in enumerate(ids) if vid % centroid_mod == 0]
     cent.sort(key=lambda i: ids[i])
     C = M[cent]
+    # drop centroids equal to an earlier one, as semantic_dedup_frame does
+    C = C[np.sort(np.unique(C, axis=0, return_index=True)[1])]
     Cn = _unit_rows(C)
     Mn = _unit_rows(M)
     cell_of = np.argmax(Mn @ Cn.T, axis=1)

@@ -21,7 +21,7 @@ Scale design (the part that must survive 100 TB):
   (boilerplate) groups — O(n) edges, cluster connectivity preserved; a pair
   missed inside one hot band has b-1 other bands plus the norm_url group.
   Hot keys come from a count pre-pass whose above-cap result is tiny and
-  broadcast.
+  broadcast; building the plan runs no Spark job.
 - `a < b` canonicalization + one dedup pass before verification mirrors the
   reference's seen-id dedup (app/hash_detector.py:290-293) and keeps the
   expensive scoring stage minimal (SURVEY §4 "dedup before scoring").
@@ -29,7 +29,7 @@ Scale design (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from dedup.config import DedupConfig
 
@@ -69,7 +69,7 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
                         cap: int, member_col: str = "url",
                         keep_keys: bool = False,
                         payload_col: str | None = None,
-                        track_hot_keys: bool = False):
+                        funnel: Observation | None = None) -> DataFrame:
     """(key..., member) -> (a, b) pairs within each key group, skew-aware.
 
     Groups with <= cap members emit all pairs via native expansion; hot
@@ -79,15 +79,15 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
     label pair provenance). Null key values form their own groups (null-safe
     joins throughout).
 
-    Building the plan runs one action on batch input: a count() of the
-    above-cap (hot) keys, which materializes the checkpointed key and
-    count tables below and skips the whole hot subplan when it reads 0.
-    With `track_hot_keys`, returns the TUPLE (pairs, n_hot) — n_hot is
-    that count, the caller's capped-bucket observability number (None on
-    streaming input, which cannot probe). Nothing is persisted for it. An
-    explicit tuple, not an attribute on the DataFrame: an attribute
-    silently vanishes on the first .where/.select a caller applies (that
-    exact bug broke the engine-mode pipeline in round 5).
+    A pure plan: building it runs no Spark job and nothing is materialized.
+    The hot subplan is always planned; when no key is hot its broadcast
+    side is empty and AQE prunes the branch at run time. With `funnel`,
+    the per-key count aggregate is observed by that Observation, which
+    fills on the first action over the result with the key funnel `keys`
+    (distinct keys), `singleton` (n == 1), `cold` (1 < n <= cap) and `hot`
+    (n > cap, the capped-bucket count), n being a key's row count. When
+    the result is empty AQE may prune every branch that reads the
+    aggregate, and the Observation then holds no metrics.
 
     With `payload_col`, each member carries one scalar payload through the
     expansion and every emitted pair exposes both sides as (pa, pb) — this
@@ -109,33 +109,19 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
     join is deliberately un-hinted: AQE broadcasts the eligible side at
     bench scale and falls back to a shuffle join when the multi-key set
     is corpus-sized; hot-key joins stay explicitly broadcast (tiny by
-    construction).
-
-    r6: the key/member table is also MATERIALIZED once (localCheckpoint,
-    lazy) before fan-out. The physical plan references it from four
-    subplans (count pre-pass, cold branch, hot branch, hot-center
-    aggregation), and without materialization each reference re-derives
-    the full key emission — for candidate_pairs that meant re-running
-    the signatures-scan + key-explode Generate up to six times per run
-    (measured: the r5 p2 plan held 6 MapInPandas subtrees).
-    localCheckpoint rather than persist() so the blocks are reclaimed by
-    the ContextCleaner when the plan is GC'd instead of pinning the SQL
-    CacheManager across pipeline runs; the lost-executor recompute trade
-    is the one cluster.py already takes."""
+    construction)."""
     cols = [*key_cols, F.col(member_col).alias("url")]
     if payload_col is not None:
         cols.append(F.col(payload_col).alias("_pl"))
     m = members.select(*cols)
-    if not m.isStreaming:
-        m = m.localCheckpoint(eager=False)
     counts = m.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
-    if not members.isStreaming:
-        # materialized as well: the count table feeds THREE branches
-        # (eligible join, hot join, hot centers), and attribute
-        # deduplication across the self-referencing branches defeats
-        # exchange reuse, so without this the slim aggregation re-runs
-        # once per branch (observed in the r6 profiling plan)
-        counts = counts.localCheckpoint(eager=False)
+    if funnel is not None:
+        n = F.col("n")
+        counts = counts.observe(
+            funnel, F.count(F.lit(1)).alias("keys"),
+            F.count_if(n == 1).alias("singleton"),
+            F.count_if((n > 1) & (n <= cap)).alias("cold"),
+            F.count_if(n > cap).alias("hot"))
     hot_keys = (counts.where(F.col("n") > cap).drop("n")
                 .withColumn("_hot", F.lit(True)))
     # keys that can emit cold all-pairs: more than one member row, not hot
@@ -157,39 +143,26 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
                           F.explode(F.expr(expansion)).alias("p"))
                   .select(*key_cols, *pair_cols))
 
-    # Hot keys are the rare case (zero at typical bench scale); one count
-    # over the already-materialized counts skips the entire hot subplan
-    # (two more scans of m + a min aggregation) when there are none — the
-    # same data-dependent gate discipline cluster.py's driver threshold
-    # uses — and is the capped-bucket count callers record. count() ran
-    # one job fewer than limit(1).count() on synth_dense (3 against 4).
-    # Streaming inputs cannot probe and keep both branches.
-    n_hot = None if members.isStreaming else hot_keys.count()
-    if n_hot != 0:
-        hot = _join_on_keys(m, hot_keys, key_cols, "inner").drop("_hot")
-        if payload_col is not None:
-            # min over (url, payload) structs == min url (payload is a
-            # pure function of the url)
-            hot_centers = (hot.groupBy(*key_cols)
-                           .agg(F.min(F.struct("url", "_pl")).alias("_c"))
-                           .select(*key_cols, F.col("_c.url").alias("a"),
-                                   F.col("_c._pl").alias("pa")))
-            hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
-                         .where(F.col("url") != F.col("a"))
-                         .select(*key_cols, "a", F.col("url").alias("b"),
-                                 "pa", F.col("_pl").alias("pb")))
-        else:
-            hot_centers = hot.groupBy(*key_cols).agg(F.min("url").alias("a"))
-            hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
-                         .where(F.col("url") != F.col("a"))
-                         .select(*key_cols, "a", F.col("url").alias("b")))
-        out = cold_pairs.unionByName(hot_pairs)
+    hot = _join_on_keys(m, hot_keys, key_cols, "inner").drop("_hot")
+    if payload_col is not None:
+        # min over (url, payload) structs == min url (payload is a pure
+        # function of the url)
+        hot_centers = (hot.groupBy(*key_cols)
+                       .agg(F.min(F.struct("url", "_pl")).alias("_c"))
+                       .select(*key_cols, F.col("_c.url").alias("a"),
+                               F.col("_c._pl").alias("pa")))
+        hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
+                     .where(F.col("url") != F.col("a"))
+                     .select(*key_cols, "a", F.col("url").alias("b"),
+                             "pa", F.col("_pl").alias("pb")))
     else:
-        out = cold_pairs
+        hot_centers = hot.groupBy(*key_cols).agg(F.min("url").alias("a"))
+        hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
+                     .where(F.col("url") != F.col("a"))
+                     .select(*key_cols, "a", F.col("url").alias("b")))
     keep = ([*key_cols] if keep_keys else []) + ["a", "b"] + \
         (["pa", "pb"] if payload_col is not None else [])
-    result = out.select(*keep)
-    return (result, n_hot) if track_hot_keys else result
+    return cold_pairs.unionByName(hot_pairs).select(*keep)
 
 
 GROUP_KEY_COLS = ["gk_band", "gk_url", "gk_txt"]
@@ -277,7 +250,7 @@ def unified_group_keys(signatures: DataFrame, cfg: DedupConfig,
 def candidate_pairs(signatures: DataFrame,
                     cfg: DedupConfig,
                     use_simhash_prefilter: bool = False,
-                    track_hot_keys: bool = False):
+                    funnel: Observation | None = None) -> DataFrame:
     """Full candidate set: LSH ∪ url_exact in ONE key-emission pass — one
     signatures scan, one grouped pair-expansion shuffle, one labeling
     aggregation (instead of separate band and url subplans + a dedup
@@ -285,8 +258,9 @@ def candidate_pairs(signatures: DataFrame,
     1.0 regardless of text, like the reference's short-circuit at
     app/hash_detector.py:263-266.
 
-    With `track_hot_keys`, returns (pairs, n_hot) — see
-    pairs_within_groups."""
+    A pure plan, like pairs_within_groups; `funnel` is handed to it and
+    observes the key funnel (keys -> singleton / cold / hot) on the first
+    action over the result."""
     # Engine mode: SimHash rides the key emission as a member payload so
     # the Hamming gate runs INSIDE the pair-expansion codegen stage — the
     # raw pair rows a boilerplate-heavy char-shingle banding emits
@@ -298,10 +272,10 @@ def candidate_pairs(signatures: DataFrame,
     # applied in parity runs (the reference has no SimHash).
     keys = unified_group_keys(signatures, cfg,
                               with_simhash=use_simhash_prefilter)
-    tagged, n_hot = pairs_within_groups(
+    tagged = pairs_within_groups(
         keys, GROUP_KEY_COLS, cfg.band_bucket_cap, keep_keys=True,
         payload_col="simhash" if use_simhash_prefilter else None,
-        track_hot_keys=True)
+        funnel=funnel)
     if use_simhash_prefilter:
         tagged = (tagged.where(
             F.col("gk_url").isNotNull()
@@ -311,7 +285,7 @@ def candidate_pairs(signatures: DataFrame,
     # provenance priority mirrors the reference's field order (url exact
     # short-circuits, hash bands are the signature path, title and
     # description-prefix searches are the metadata recall paths)
-    result = (tagged.groupBy("a", "b")
+    return (tagged.groupBy("a", "b")
             .agg(F.max(F.col("gk_url").isNotNull()).alias("_exact"),
                  F.max(F.col("gk_band").isNotNull()).alias("_band"),
                  F.max(F.col("gk_txt").startswith("t:")).alias("_title"))
@@ -320,4 +294,3 @@ def candidate_pairs(signatures: DataFrame,
                     .when(F.col("_band"), F.lit("lsh"))
                     .when(F.col("_title"), F.lit("title"))
                     .otherwise(F.lit("description")).alias("match_source")))
-    return (result, n_hot) if track_hot_keys else result

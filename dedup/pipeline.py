@@ -12,14 +12,16 @@ construction as the reference's detection-cache key, app/main.py:207-225).
 A stage whose manifest matches the current job key is SKIPPED on resume and
 its table is read back — resume-from-failure therefore costs only the stages
 after the last completed checkpoint. Lineage lives in
-`workdir/_lineage/<stage>.json`; per-part row counts and wall times go to
-the `metrics` table (`workdir/metrics/`).
+`workdir/_lineage/<stage>.json` (the pairs manifest also carries the key
+funnel: keys -> singleton / cold / hot); per-part row counts and wall times
+go to the `metrics` table (`workdir/metrics/`).
 
 Bookkeeping rides the write and launches no Spark job in path mode: row
 counts come from the footers of the part files the stage write produced,
 one metrics row per written file; the metrics rows are one Arrow table
 written from the driver; the stage table is read back with the schema of
-the frame that was written. Every job a stage runs carries the job tag
+the frame that was written; the pairs stage's key funnel is an Observation
+that fills during its write. Every job a stage runs carries the job tag
 `dedup-stage:<stage>`.
 
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
@@ -37,7 +39,7 @@ from dataclasses import dataclass
 from pathlib import Path
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from dedup.cluster import assign_clusters
@@ -112,7 +114,8 @@ class DedupPipeline:
                 and self.storage.table_complete(self._stage_ref(stage)))
 
     def _write_manifest(self, stage: str, rows: int, wall_ms: float,
-                        n_partitions: int) -> None:
+                        n_partitions: int,
+                        funnel: dict | None = None) -> None:
         from dataclasses import asdict
 
         from dedup.config import SIGNATURE_VERSION
@@ -125,6 +128,7 @@ class DedupPipeline:
             "rows": rows,
             "wall_ms": wall_ms,
             "n_partitions": n_partitions,
+            "funnel": funnel,
             "finished_at": time.time(),
         }, indent=2))
 
@@ -150,10 +154,15 @@ class DedupPipeline:
             pa.Table.from_pylist(rows, schema=METRICS_SCHEMA),
             self._stage_ref("metrics"))
 
-    def _run_stage(self, stage: str, build) -> DataFrame:
+    def _run_stage(self, stage: str, build,
+                   funnel: Observation | None = None) -> DataFrame:
         """Build and write one stage, or read it back when a resumable
-        checkpoint exists. `build` returns the stage frame, or (frame,
-        n_capped_buckets) for the pairs stage."""
+        checkpoint exists. `funnel` is the Observation the built frame
+        carries (the pairs stage's key funnel): it fills during the stage
+        write, and is recorded in the manifest, with its `hot` count as
+        the metrics rows' n_capped_buckets. It is not read when the stage
+        wrote no row: AQE then may have pruned the observed subplan, and
+        the Observation holds no metrics."""
         from dedup.metrics import rest_stage_metrics, stage_ids, task_totals
 
         ref = self._stage_ref(stage)
@@ -170,17 +179,18 @@ class DedupPipeline:
         sc.addJobTag(tag)
         try:
             built = build()
-            built, capped = (built if isinstance(built, tuple)
-                             else (built, None))
             self.storage.write_table(built, ref)
             wall_ms = (time.monotonic() - t0) * 1000
             totals = task_totals(rest_stage_metrics(self.spark), before)
             counts = self.storage.part_row_counts(ref)
         finally:
             sc.removeJobTag(tag)
-        self._record_metrics(stage, counts, wall_ms, totals, capped)
         rows = sum(counts)
-        self._write_manifest(stage, rows, wall_ms, max(1, len(counts)))
+        observed = funnel.get if funnel is not None and rows else None
+        self._record_metrics(stage, counts, wall_ms, totals,
+                             observed["hot"] if observed else None)
+        self._write_manifest(stage, rows, wall_ms, max(1, len(counts)),
+                             observed)
         self.stage_infos.append(StageInfo(stage, False, rows, wall_ms))
         return self.storage.read_table(ref, schema=built.schema)
 
@@ -228,12 +238,14 @@ class DedupPipeline:
                 .repartitionByRange(self.cfg.shuffle_partitions,
                                     "gk_band", "gk_url", "gk_txt")
                 .sortWithinPartitions("gk_band", "gk_url", "gk_txt"))
+        funnel = Observation()
         pairs = self._run_stage(
             "pairs",
             lambda: candidate_pairs(
                 signatures, self.cfg,
                 use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
-                track_hot_keys=True))
+                funnel=funnel),
+            funnel)
         verified = self._run_stage(
             "verified", lambda: verify_pairs(pairs, signatures, self.cfg))
         clusters = self._run_stage(

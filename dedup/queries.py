@@ -1707,6 +1707,10 @@ def semantic_dedup_frame(spark, e: DataFrame, t: float, cell_cap: int):
     cent_rows = (e.where(F.col("vec_id") % mod == 0)
                  .orderBy("vec_id").collect())
     C = np.stack([np.asarray(r["v"]) for r in cent_rows])
+    # a planted clone (vec_id + 100000) can be a centroid identical to its
+    # original; ties would then follow BLAS rounding. Keep the first copy
+    # (clones sort last, so no cell index shifts).
+    C = C[np.sort(np.unique(C, axis=0, return_index=True)[1])]
     Cn_bc = spark.sparkContext.broadcast(_unit_rows(C))
     capped_acc = spark.sparkContext.accumulator(0)
 

@@ -1,9 +1,9 @@
 """jobs/dedupe_corpus.py CLI smoke: the spark-submit batch surface runs
 end-to-end in BOTH modes. Engine mode matters most — it routes
-candidate_pairs through the SimHash-prefilter branch with
-track_hot_keys=True, the exact composition a round-5 review found broken
-(hot-keys attribute lost to the gate's DataFrame reassignment) while
-every pipeline test used parity config.
+candidate_pairs through the SimHash-prefilter branch with the pipeline's
+key-funnel Observation attached, the composition a round-5 review found
+broken (hot-keys attribute lost to the gate's DataFrame reassignment)
+while every pipeline test used parity config.
 
 Same one-subprocess/one-JVM trick as test_cli_detect: build_session is
 patched to hand every main() call the same live session."""

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pytest
 
 from dedup.cluster import assign_clusters, connected_components
@@ -54,6 +55,14 @@ class TestConnectedComponents:
         edges += [(f"k{i}", f"k{j}") for i in range(6) for j in range(i + 1, 6)]
         _check(spark, edges)
 
+    def test_url_graph(self, spark):
+        # url-shaped vertices: the distributed path encodes them to int64
+        # ids and recovers each component's min url after propagation
+        rng = np.random.RandomState(11)
+        _check(spark, [(f"https://site{rng.randint(0, 300)}.org/x",
+                        f"https://site{rng.randint(0, 300)}.org/x")
+                       for _ in range(400)])
+
     def test_random_graphs(self, spark):
         rng = random.Random(42)
         for trial in range(3):
@@ -82,6 +91,24 @@ class TestAssignClusters:
         got = {r["url"]: r["cluster_id"]
                for r in assign_clusters(corpus, edges).collect()}
         assert got == {"u1": "u1", "u3": "u1", "u2": "u2", "u4": "u4"}
+
+
+    def test_driver_path_assignment_broadcasts_into_anti_join(self, spark):
+        # the driver union-find assignment is bounded by driver_threshold
+        # by construction; the singleton anti-join must plan as broadcast,
+        # not a corpus-wide sort-merge
+        corpus = spark.createDataFrame(
+            [(f"u{i}",) for i in range(50)], "url string")
+        edges = spark.createDataFrame(
+            [("u1", "u2"), ("u2", "u3"), ("u10", "u11")],
+            "a string, b string")
+        df = assign_clusters(corpus, edges)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan
+        rows = {r["url"]: r["cluster_id"] for r in df.collect()}
+        assert rows["u3"] == "u1" and rows["u11"] == "u10"
+        assert rows["u42"] == "u42"
+        assert len(rows) == 50
 
 
 class TestMergeAssignments:

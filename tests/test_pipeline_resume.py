@@ -89,6 +89,8 @@ class TestResume:
                 "shuffle_write_bytes", "num_tasks"} <= set(m.columns)
         assert m.where("executor_run_time_ms IS NULL").count() == 0
         assert m.where("num_tasks IS NULL OR num_tasks <= 0").count() == 0
+        assert m.where("stage = 'pairs' AND shuffle_write_bytes > 0"
+                       ).count() > 0
 
     def test_metrics_degrade_to_null_without_rest(self):
         """With no REST snapshot (UI off / unreachable) the telemetry
@@ -96,49 +98,6 @@ class TestResume:
         from dedup.metrics import stage_ids, task_totals
         assert task_totals(None) is None
         assert stage_ids(None) == set()
-
-
-_UI_METRICS_SCRIPT = """
-import sys
-sys.path.insert(0, {repo!r})
-from dedup.config import PARITY_CONFIG
-from dedup.pipeline import dedupe_corpus
-from dedup.session import build_session
-from dedup.synth import corpus_pdf
-
-spark = build_session(
-    "metrics-ui", master="local[4]", shuffle_partitions=8,
-    extra_conf={{"spark.ui.enabled": "true", "spark.ui.port": "0"}})
-corpus = spark.createDataFrame(corpus_pdf(80, seed=21))
-tables = dedupe_corpus(spark, corpus, {workdir!r}, PARITY_CONFIG)
-by_stage = {{}}
-for r in tables["metrics"].collect():
-    by_stage.setdefault(r["stage"], r)
-for stage, row in by_stage.items():
-    assert row["executor_run_time_ms"] is not None, stage
-    assert row["num_tasks"] and row["num_tasks"] > 0, stage
-assert by_stage["pairs"]["shuffle_write_bytes"] > 0
-spark.stop()
-print("UI_METRICS_OK")
-"""
-
-
-def test_metrics_rest_telemetry_with_ui_enabled(tmp_path):
-    """M12 for real: a UI-enabled session exposes the monitoring REST API
-    and every non-skipped stage lands task-level telemetry (executor run
-    time, shuffle bytes) in the metrics table. Runs in a subprocess: the
-    suite's shared session (getOrCreate) pins spark.ui.enabled=false."""
-    import subprocess
-    import sys
-    from pathlib import Path
-
-    repo = str(Path(__file__).resolve().parent.parent)
-    script = _UI_METRICS_SCRIPT.format(repo=repo,
-                                       workdir=str(tmp_path / "job"))
-    proc = subprocess.run([sys.executable, "-c", script],
-                          capture_output=True, text=True, timeout=420)
-    assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "UI_METRICS_OK" in proc.stdout
 
 
 def test_pipeline_metrics_record_capped_buckets(spark, tmp_path):
@@ -166,6 +125,13 @@ def test_pipeline_metrics_record_capped_buckets(spark, tmp_path):
     other_vals = {r["n_capped_buckets"]
                   for r in m.where("stage != 'pairs'").collect()}
     assert other_vals == {None}
+    # the pairs manifest carries the key funnel the count came from
+    import json
+    funnel = json.loads(
+        (tmp_path / "wd" / "_lineage" / "pairs.json").read_text())["funnel"]
+    assert funnel["hot"] == capped
+    assert funnel["keys"] == (funnel["singleton"] + funnel["cold"]
+                              + funnel["hot"])
 
 
 def test_engine_mode_pipeline_tracks_capped_buckets(spark, tmp_path):
@@ -267,8 +233,10 @@ def test_stage_bookkeeping_runs_no_spark_job(spark, corpus_df, tmp_path):
     """Path mode: everything _run_stage does after the stage write returns
     (part row counts, the metrics append, the manifest, the read-back)
     launches no Spark job, for a plain stage and for the pairs stage with
-    its capped-bucket count."""
+    its key-funnel Observation."""
     import uuid
+
+    from pyspark.sql import Observation
 
     from dedup.lsh import candidate_pairs
     from dedup.signature import signatures_table
@@ -287,10 +255,10 @@ def test_stage_bookkeeping_runs_no_spark_job(spark, corpus_df, tmp_path):
     pipe = DedupPipeline(spark, str(tmp_path / "wd"), PARITY_CONFIG,
                          resume=False, storage=st)
 
-    def bookkeeping_jobs(stage, build):
+    def bookkeeping_jobs(stage, build, funnel=None):
         st.group = f"bookkeeping-{stage}-{uuid.uuid4().hex}"
         try:
-            df = pipe._run_stage(stage, build)
+            df = pipe._run_stage(stage, build, funnel)
         finally:
             _clear_job_group(sc)
         _settle(spark)
@@ -301,9 +269,10 @@ def test_stage_bookkeeping_runs_no_spark_job(spark, corpus_df, tmp_path):
             corpus_df, PARITY_CONFIG, extract_html_col="html",
             emit_text=True))
     assert jobs == []
+    funnel = Observation()
     pairs, jobs = bookkeeping_jobs(
-        "pairs", lambda: candidate_pairs(sigs, PARITY_CONFIG,
-                                         track_hot_keys=True))
+        "pairs", lambda: candidate_pairs(sigs, PARITY_CONFIG, funnel=funnel),
+        funnel)
     assert jobs == []
     assert [s.name for s in pipe.stage_infos] == ["signatures", "pairs"]
     assert pipe.stage_infos[1].rows == pairs.count() > 0

@@ -1,7 +1,6 @@
 """Round-4 coverage: fully-vectorized engine Jaccard verify (flattened
-searchsorted + native MinHash-estimate prefilter), dense int64 CC vertex
-encoding, trained IVF quantizer (artifact + recall), --scoring CLI flag,
-incremental-ingest driver row."""
+searchsorted + native MinHash-estimate prefilter), trained IVF quantizer
+(artifact + recall), --scoring CLI flag, incremental-ingest driver row."""
 
 from __future__ import annotations
 
@@ -190,25 +189,6 @@ def test_batch_jaccards_property(pairs):
                          pa.array(b, type=pa.list_(pa.int64())))
     for i, (x, y) in enumerate(pairs):
         assert got[i] == _brute_jaccard(x, y)
-
-
-# --- connected components: dense int64 encoding -----------------------------
-
-def test_cc_encoded_equals_string_path(spark):
-    from dedup.cluster import connected_components
-
-    rng = np.random.RandomState(11)
-    edges = [(f"https://site{rng.randint(0, 300)}.org/x",
-              f"https://site{rng.randint(0, 300)}.org/x")
-             for _ in range(400)]
-    df = spark.createDataFrame(edges, "a string, b string")
-    enc = {(r["url"], r["cluster_id"]) for r in connected_components(
-        df, driver_threshold=0, encode_ids=True).collect()}
-    plain = {(r["url"], r["cluster_id"]) for r in connected_components(
-        df, driver_threshold=0, encode_ids=False).collect()}
-    driver = {(r["url"], r["cluster_id"]) for r in connected_components(
-        df, driver_threshold=10**6).collect()}
-    assert enc == plain == driver and enc
 
 
 # --- trained IVF quantizer ---------------------------------------------------

@@ -177,63 +177,6 @@ def test_batched_minhash_simhash_bit_exact():
             assert hashes[i] == simhash64(a), i
 
 
-def test_pairs_within_groups_matches_r5_formulation(spark):
-    # r6 routes only multi-member non-hot keys into the collect_set
-    # aggregation and probe-skips the hot branch; the emitted pair set
-    # must equal the r5 all-keys formulation, hot keys included
-    from dedup.lsh import _PAIR_EXPANSION, pairs_within_groups
-
-    rows = []
-    for k in range(30):            # singleton keys
-        rows.append((f"k{k:03d}", f"u{k:03d}"))
-    for k in range(5):             # cold multi keys (2-4 members)
-        for i in range(2 + k % 3):
-            rows.append((f"m{k}", f"mu{k}_{i:02d}"))
-    for i in range(20):            # one hot key (cap below)
-        rows.append(("hot", f"h{i:02d}"))
-    members = spark.createDataFrame(rows, "k string, url string")
-
-    def r5_pairs(members, cap):
-        m = members.select("k", "url")
-        hot_keys = (m.groupBy("k").agg(F.count(F.lit(1)).alias("n"))
-                    .where(F.col("n") > cap).drop("n")
-                    .withColumn("_hot", F.lit(True)))
-        marked = m.join(F.broadcast(
-            hot_keys.withColumnRenamed("k", "__k")),
-            F.col("k").eqNullSafe(F.col("__k")), "left").drop("__k")
-        cold = (marked.where(F.col("_hot").isNull()).groupBy("k")
-                .agg(F.sort_array(F.collect_set("url")).alias("us"))
-                .where(F.size("us") > 1)
-                .select("k", F.explode(F.expr(_PAIR_EXPANSION)).alias("p"))
-                .select("k", "p.a", "p.b"))
-        hot = marked.where(F.col("_hot").isNotNull()).drop("_hot")
-        centers = hot.groupBy("k").agg(F.min("url").alias("a"))
-        hot_pairs = (hot.join(F.broadcast(
-            centers.withColumnRenamed("k", "__k")),
-            F.col("k").eqNullSafe(F.col("__k")), "inner").drop("__k")
-            .where(F.col("url") != F.col("a"))
-            .select("k", "a", F.col("url").alias("b")))
-        return cold.unionByName(hot_pairs).select("a", "b")
-
-    for cap in (8, 3):
-        want = sorted(tuple(r) for r in r5_pairs(members, cap).collect())
-        got = sorted(tuple(r) for r in
-                     pairs_within_groups(members, ["k"], cap).collect())
-        assert got == want, (cap, len(got), len(want))
-
-
-def test_pairs_within_groups_skips_hot_branch_when_none(spark):
-    # with no hot key the executed plan must hold a single aggregation
-    # chain (count pre-pass + cold collect_set), no hot-center min agg
-    from dedup.lsh import pairs_within_groups
-    members = spark.createDataFrame(
-        [("a", "u1"), ("a", "u2"), ("b", "u3")], "k string, url string")
-    df = pairs_within_groups(members, ["k"], cap=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Union" not in plan
-    assert [tuple(r) for r in df.collect()] == [("u1", "u2")]
-
-
 def test_verify_cosine_matches_r5_barrier_and_evaluates_udf_once(spark):
     # the r6 parity path scores through a nondeterministic pandas-UDF
     # column; results must equal the r5 mapInPandas barrier exactly and
@@ -300,24 +243,6 @@ def test_verify_cosine_matches_r5_barrier_and_evaluates_udf_once(spark):
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
     pairs.unpersist()
-
-
-def test_driver_path_assignment_broadcasts_into_anti_join(spark):
-    # the driver union-find assignment is bounded by driver_threshold by
-    # construction; the singleton anti-join must plan as broadcast, not
-    # a corpus-wide sort-merge
-    from dedup.cluster import assign_clusters
-    corpus = spark.createDataFrame(
-        [(f"u{i}",) for i in range(50)], "url string")
-    edges = spark.createDataFrame(
-        [("u1", "u2"), ("u2", "u3"), ("u10", "u11")], "a string, b string")
-    df = assign_clusters(corpus, edges)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
-    rows = {r["url"]: r["cluster_id"] for r in df.collect()}
-    assert rows["u3"] == "u1" and rows["u11"] == "u10"
-    assert rows["u42"] == "u42"
-    assert len(rows) == 50
 
 
 def test_domain_stats_matches_r5_formulation(spark):

@@ -6,11 +6,9 @@ Usage: python tools/dump_plans.py <tag> [query ...]
 
 Covers the 12 bench-timed paths: the four pipeline stages (built exactly as
 bench.py builds them, minus persist) and the eight operator queries. No
-query is collected, but building the pipeline frames runs Spark jobs: p2's
-hot-key probe in `lsh.pairs_within_groups` (which also materializes its
-lazily checkpointed key and count tables), and p4's union-find collect in
-`cluster.connected_components`, which executes p1-p3 to pull the verified
-edges to the driver.
+query is collected. Building the p1-p3 frames runs no Spark job; only p4's
+union-find collect in `cluster.connected_components` runs at build time,
+and it executes p1-p3 to pull the verified edges to the driver.
 """
 
 from __future__ import annotations
