@@ -12,17 +12,26 @@ construction as the reference's detection-cache key, app/main.py:207-225).
 A stage whose manifest matches the current job key is SKIPPED on resume and
 its table is read back — resume-from-failure therefore costs only the stages
 after the last completed checkpoint. Lineage lives in
-`workdir/_lineage/<stage>.json` (the pairs manifest also carries the key
-funnel: keys -> singleton / cold / hot); per-part row counts and wall times
-go to the `metrics` table (`workdir/metrics/`).
+`workdir/_lineage/<stage>.json`; per-part row counts and wall times go to
+the `metrics` table (`workdir/metrics/`). Two manifests carry a funnel:
+- pairs: keys -> singleton / cold / hot;
+- verified: pairs, one count per match_source, scored (similarity not
+  null) and kept.
 
 Bookkeeping rides the write and launches no Spark job in path mode: row
 counts come from the footers of the part files the stage write produced,
 one metrics row per written file; the metrics rows are one Arrow table
 written from the driver; the stage table is read back with the schema of
-the frame that was written; the pairs stage's key funnel is an Observation
-that fills during its write. Every job a stage runs carries the job tag
-`dedup-stage:<stage>`.
+the frame that was written; each funnel is an Observation that fills
+during its stage's write (the verified one on the written frame itself).
+Every job a stage runs carries the job tag `dedup-stage:<stage>`.
+
+The verified stage runs one driver step before its write:
+`verify.broadcast_signatures`, one bounded collect of the signed rows that
+gates the broadcast verify plan (the pairs read once, scored by row index
+against one broadcast signature matrix). Its job carries the stage's tag;
+the stage destroys the broadcast after the write. Over the gate's bound
+the join plan runs.
 
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
 groupBy, pair join, label-prop iterations), so checkpoints double as shuffle
@@ -40,6 +49,7 @@ from pathlib import Path
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from dedup.cluster import assign_clusters
@@ -47,7 +57,7 @@ from dedup.config import DedupConfig
 from dedup.lsh import candidate_pairs
 from dedup.signature import signatures_table
 from dedup.storage import Storage
-from dedup.verify import verify_pairs
+from dedup.verify import broadcast_signatures, verify_pairs
 
 STAGES = ("signatures", "pairs", "verified", "clusters")
 # optional stages that only exist when requested (still invalidated)
@@ -62,6 +72,17 @@ METRICS_SCHEMA = pa.schema([
 METRICS_SPARK_SCHEMA = from_arrow_schema(METRICS_SCHEMA)
 _TELEMETRY = ("executor_run_time_ms", "shuffle_read_bytes",
               "shuffle_write_bytes", "num_tasks")
+
+
+def verified_funnel_columns():
+    """The verified stage's funnel, observed on the frame it writes:
+    pairs, one count per match_source, scored (similarity not null) and
+    kept."""
+    return (F.count(F.lit(1)).alias("pairs"),
+            *(F.count_if(F.col("match_source") == src).alias(src)
+              for src in ("url_exact", "lsh", "title", "description")),
+            F.count("similarity").alias("scored"),
+            F.count_if("keep").alias("kept"))
 
 
 @dataclass
@@ -188,7 +209,7 @@ class DedupPipeline:
         rows = sum(counts)
         observed = funnel.get if funnel is not None and rows else None
         self._record_metrics(stage, counts, wall_ms, totals,
-                             observed["hot"] if observed else None)
+                             (observed or {}).get("hot"))
         self._write_manifest(stage, rows, wall_ms, max(1, len(counts)),
                              observed)
         self.stage_infos.append(StageInfo(stage, False, rows, wall_ms))
@@ -246,8 +267,21 @@ class DedupPipeline:
                 use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
                 funnel=funnel),
             funnel)
-        verified = self._run_stage(
-            "verified", lambda: verify_pairs(pairs, signatures, self.cfg))
+        verified_funnel = Observation()
+        sig_broadcast = []
+
+        def build_verified():
+            sig_broadcast.append(broadcast_signatures(signatures, self.cfg))
+            return verify_pairs(pairs, signatures, self.cfg,
+                                sig_broadcast=sig_broadcast[0]).observe(
+                verified_funnel, *verified_funnel_columns())
+
+        try:
+            verified = self._run_stage("verified", build_verified,
+                                       verified_funnel)
+        finally:
+            if sig_broadcast and sig_broadcast[0] is not None:
+                sig_broadcast[0].destroy()
         clusters = self._run_stage(
             "clusters",
             lambda: assign_clusters(

@@ -701,7 +701,10 @@ def q_minhash_signatures(spark, sf_dir):
 def q_lsh_candidate_pairs(spark, sf_dir):
     """LSH banding + url-exact candidate generation (rows-only)."""
     c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, PARITY_CONFIG)
+    # the p2 plan reads its signature input once per branch (key counts,
+    # cold join, hot join, hot centers); a lazy signatures_table would be
+    # signed once per branch, so every p2 caller here signs it once
+    s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
     return candidate_pairs(s, PARITY_CONFIG).orderBy("a", "b")
 
 
@@ -751,7 +754,7 @@ def q_metadata_block_pairs(spark, sf_dir):
     collision path exists for them. Oracle: VALUES fixture from the
     independent single-node engine."""
     sigs = signatures_table(docs_as_metadata_corpus(spark, sf_dir),
-                            PARITY_CONFIG)
+                            PARITY_CONFIG).localCheckpoint()
     return (candidate_pairs(sigs, PARITY_CONFIG)
             .orderBy("a", "b"))
 
@@ -760,7 +763,7 @@ def _parity_assignment(spark, sf_dir):
     """Shared parity chain (signatures -> LSH+url pairs -> verify -> CC)
     over the planted-mirror corpus; returns (signatures, assignment)."""
     c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, PARITY_CONFIG)
+    s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
     pairs = candidate_pairs(s, PARITY_CONFIG)
     verified = verify_pairs(pairs, s, PARITY_CONFIG)
     return s, assign_clusters(c.select("url"),
@@ -1103,7 +1106,7 @@ def q_lsh_planted_recall(spark, sf_dir):
     query inner-joins the candidate set with the ground truth; a recall
     miss drops a row and fails the driver's row/hash compare."""
     c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, PARITY_CONFIG)
+    s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
     pairs = candidate_pairs(s, PARITY_CONFIG).select("a", "b")
     left = c.select(F.col("url").alias("a"), F.col("text").alias("_t"))
     right = c.select(F.col("url").alias("b"), F.col("text").alias("_t"))
@@ -1390,7 +1393,7 @@ def q_dup_clusters_engine(spark, sf_dir):
     Oracle: VALUES fixture from the single-node engine running the same
     stages (tools/gen_oracle_fixtures.py engine_clusters_expected)."""
     c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, ENGINE_CONFIG)
+    s = signatures_table(c, ENGINE_CONFIG).localCheckpoint()
     pairs = candidate_pairs(s, ENGINE_CONFIG, use_simhash_prefilter=True)
     verified = verify_pairs(pairs, s, ENGINE_CONFIG)
     return assign_clusters(c.select("url"),
@@ -1419,7 +1422,7 @@ def q_clusters_incremental(spark, sf_dir):
     component-minimum cluster ids."""
     from dedup.cluster import merge_assignments
     c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, PARITY_CONFIG)
+    s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
     # both splits read the verified edges; localCheckpoint materializes the
     # expensive verify DAG once instead of once per split-consumer
     verified = (verify_pairs(candidate_pairs(s, PARITY_CONFIG), s,

@@ -17,6 +17,15 @@ the per-document lookups in dedup/kernel.py share:
 Scale notes:
 - candidate pairs arrive as a slim (a, b) table; signatures are joined back
   by key here so the wide arrays never ride through the banding shuffle.
+- parity (cosine) mode has a second plan for a signature table that fits a
+  broadcast: `broadcast_signatures` is an explicit driver step (one bounded
+  collect) that ships every worker the (urls, float64 matrix) pair once;
+  `verify_pairs` then reads the pairs in ONE mapInArrow that scores rows
+  by index, so only the two url strings of a pair cross the Python
+  boundary, not its two signature arrays. The gate's row bound is
+  spark.sql.autoBroadcastJoinThreshold // (8 * num_hashes) — the bytes of
+  the matrix under the planner's own broadcast budget; above it, with
+  duplicate signed urls, or in engine mode the join plan runs.
 - engine (jaccard) mode is two-phase: a NATIVE MinHash-estimate prefilter
   over the already-joined signature vectors rejects most non-duplicate
   pairs before the 10-100x wider shingle arrays are joined at all.
@@ -25,6 +34,7 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
@@ -130,8 +140,80 @@ def minhash_estimate_equal_count_col(sig_a="_sig_a", sig_b="_sig_b"):
         f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), v -> v))")
 
 
-def verify_pairs(pairs: DataFrame, signatures: DataFrame,
-                 cfg: DedupConfig) -> DataFrame:
+def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig):
+    """The gate step of the broadcast verify plan: ONE bounded collect of
+    the signed (url, minhash) rows -> a Spark broadcast of
+    (pd.Index of urls, (n, num_hashes) float64 matrix) for
+    `verify_pairs(..., sig_broadcast=)`. Returns None, and the caller keeps
+    the join plan, when:
+    - cfg.scoring is "jaccard" (the shingle arrays are joined too);
+    - more than spark.sql.autoBroadcastJoinThreshold // (8 * num_hashes)
+      rows are signed, i.e. the matrix exceeds the planner's own broadcast
+      budget (a threshold of -1 means no broadcast). The collect reads at
+      most bound + 1 rows, like `connected_components`' gate;
+    - a signed url repeats: the join emits one row per matching signature
+      row, which a url -> row index cannot reproduce.
+    The caller owns the broadcast and destroy()s it after its write. A
+    pd.Index builds its hash table on its first lookup and keeps it, and a
+    worker keeps a broadcast value across tasks, so each worker builds the
+    url index once."""
+    if cfg.scoring == "jaccard":
+        return None
+    spark = signatures.sparkSession
+    budget = (spark._jsparkSession.sessionState().conf()
+              .autoBroadcastJoinThreshold())
+    if budget < 0:
+        return None
+    bound = budget // (8 * cfg.num_hashes)
+    signed = (signatures.select("url", "minhash")
+              .where(F.col("url").isNotNull() & F.col("minhash").isNotNull())
+              .limit(bound + 1).toArrow())
+    if signed.num_rows > bound:
+        return None
+    urls = pd.Index(signed.column("url").to_numpy())
+    if not urls.is_unique:
+        return None
+    return spark.sparkContext.broadcast(
+        (urls, _list_array_matrix(signed.column("minhash").combine_chunks())))
+
+
+def _verify_indexed(pairs: DataFrame, sig_broadcast,
+                    threshold: float) -> DataFrame:
+    """verify_pairs' broadcast plan: one mapInArrow over the pairs."""
+    def score(batches):
+        index, matrix = sig_broadcast.value
+        for rb in batches:
+            source = rb.column("match_source")
+            exact = pc.equal(source, "url_exact").fill_null(False).to_numpy(
+                zero_copy_only=False)
+            ia = index.get_indexer(rb.column("a").to_numpy(
+                zero_copy_only=False))
+            ib = index.get_indexer(rb.column("b").to_numpy(
+                zero_copy_only=False))
+            scored = (pc.not_equal(source, "url_exact").fill_null(False)
+                      .to_numpy(zero_copy_only=False)
+                      & (ia >= 0) & (ib >= 0))
+            sims = np.ones(len(ia))  # url_exact rows score 1.0
+            sims[scored] = _cosines_from_matrices(matrix[ia[scored]],
+                                                  matrix[ib[scored]])
+            take = exact | scored
+            exact = exact[take]
+            sim = pa.array(sims[take], from_pandas=True)  # NaN -> NULL
+            out = rb.select(["a", "b", "match_source"]).filter(pa.array(take))
+            yield pa.RecordBatch.from_pydict({
+                **dict(zip(out.schema.names, out.columns)),
+                "similarity": sim,
+                "jaccard": pa.array(np.where(exact, 1.0, np.nan),
+                                    from_pandas=True),
+                "keep": pc.or_kleene(pa.array(exact),
+                                     pc.greater_equal(sim, threshold))})
+
+    return (pairs.select("a", "b", "match_source")
+            .mapInArrow(score, schema=_VERIFIED_SCHEMA))
+
+
+def verify_pairs(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
+                 sig_broadcast=None) -> DataFrame:
     """(a, b [, match_source]) + signatures -> verified pairs with scores.
 
     Output: a, b, match_source, similarity (reference cosine scoring),
@@ -141,13 +223,25 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     the reference short-circuit (app/hash_detector.py:263-266, :295-297);
     they never reach the scoring stage.
 
-    Parity (cosine) mode: ONE nondeterministic `arrow_udf` column over the
-    natively-joined signature pairs (`_cosines_from_matrices`). Only the two
-    signature arrays cross the Python boundary; the keep comparison stays
-    in SQL. asNondeterministic stops CollapseProject from inlining the UDF
-    once per referencing expression (keep + similarity) and stops filter
-    pushdown from re-evaluating it below `where(keep)`, so the plan holds
-    exactly one ArrowEvalPython.
+    Parity (cosine) mode has two plans, with the same rows and bit-equal
+    scores:
+    - with `sig_broadcast` (from `broadcast_signatures`): ONE mapInArrow
+      reads the pairs once. url_exact rows pass with (1.0, 1.0, True);
+      every other row looks both urls up in the broadcast url index and is
+      dropped when a side is unsigned (the join's inner semantics), else
+      scored by `_cosines_from_matrices` over the two matrix rows. NaN
+      becomes NULL, and keep is similarity >= threshold with NULL
+      propagating as in SQL. Only the pair's url strings and
+      match_source cross the Python boundary;
+    - without it: ONE nondeterministic `arrow_udf` column over the
+      natively-joined signature pairs (`_cosines_from_matrices`). Only the
+      two signature arrays cross the Python boundary; the keep comparison
+      stays in SQL. asNondeterministic stops CollapseProject from inlining
+      the UDF once per referencing expression (keep + similarity) and stops
+      filter pushdown from re-evaluating it below `where(keep)`, so the
+      plan holds exactly one ArrowEvalPython. This is the plan for every
+      caller that does not run the gate (the streaming fold, the driver
+      queries, engine mode).
 
     Engine (jaccard) mode adds a native prefilter BEFORE the shingle join:
     the MinHash Jaccard estimate (equal-component count over the two
@@ -163,6 +257,8 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame,
     """
     if "match_source" not in pairs.columns:
         pairs = pairs.withColumn("match_source", F.lit("lsh"))
+    if sig_broadcast is not None:
+        return _verify_indexed(pairs, sig_broadcast, cfg.threshold)
     sig = (signatures.select("url", "minhash")
            .where(F.col("minhash").isNotNull()))
     sa = sig.select(F.col("url").alias("a"), F.col("minhash").alias("_sig_a"))

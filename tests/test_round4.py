@@ -62,65 +62,6 @@ def test_list_array_matrix_rejects_ragged_and_null_rows():
             _list_array_matrix(pa.array(bad, type=pa.list_(pa.int64())))
 
 
-def test_engine_verify_matches_oracle_including_prefilter(spark):
-    """Spark verify_pairs (engine/jaccard mode: native estimate prefilter ->
-    shingle join -> flattened searchsorted) must agree with the independent
-    single-node oracle (intersect1d path) on keeps, exact jaccards, AND the
-    NULL-scored prefilter-rejected rows."""
-    from dedup import local_oracle as lo
-    from dedup.config import ENGINE_CONFIG
-    from dedup.lsh import candidate_pairs
-    from dedup.signature import signatures_table
-    from dedup.verify import verify_pairs
-
-    base = ("the quick brown fox jumps over the lazy dog while seventeen "
-            "green turtles watch from the riverbank in complete silence "
-            "every single morning before the sun rises over the hills")
-    other = ("completely unrelated content about database query planners "
-             "and distributed shuffle exchanges in modern analytics engines "
-             "running on large clusters of commodity hardware nodes")
-    rows = [
-        ("https://a.org/1", base, "shared title one"),
-        ("https://b.org/1", base, "shared title one"),        # exact dup
-        ("https://c.org/1", base + " with a tiny suffix change",
-         "different t1"),                                     # near dup
-        # same title forces a 'title' candidate pair whose texts share
-        # ~nothing -> MinHash estimate ~0 -> prefilter rejection row
-        ("https://d.org/1", other, "block key shared"),
-        ("https://e.org/1", base[:120], "block key shared"),
-        ("https://f.org/1", other + " more words here", "unrelated title"),
-    ]
-    corpus = spark.createDataFrame(
-        rows, "url string, text string, title string")
-    sigs = signatures_table(corpus, ENGINE_CONFIG)
-    pairs = candidate_pairs(sigs, ENGINE_CONFIG)
-    got = {(r["a"], r["b"], r["match_source"]):
-           (r["similarity"], r["jaccard"], r["keep"])
-           for r in verify_pairs(pairs, sigs, ENGINE_CONFIG).collect()}
-
-    oc = [(u, t, None, ti, None) for u, t, ti in rows]
-    osigs = lo.local_signatures(oc, ENGINE_CONFIG)
-    opairs = lo.local_candidate_pairs(osigs, ENGINE_CONFIG)
-    want = {(a, b, src): (sim, jac, keep)
-            for a, b, src, sim, jac, keep in lo.local_verify(
-                opairs, osigs, ENGINE_CONFIG)}
-
-    assert set(got) == set(want)
-    rejected = kept = 0
-    for key, (wsim, wjac, wkeep) in want.items():
-        gsim, gjac, gkeep = got[key]
-        assert gkeep == wkeep, key
-        if wsim is None:
-            assert gsim is None and gjac is None, key
-            rejected += 1
-        else:
-            assert gsim == pytest.approx(wsim, abs=1e-12), key
-            assert gjac == pytest.approx(wjac, abs=0), key
-            kept += 1
-    # the scenario must actually exercise both branches
-    assert rejected >= 1 and kept >= 2
-
-
 def test_engine_prefilter_never_drops_true_dups(spark):
     """dup_clusters_engine (prefilter active) still equals the oracle
     fixture path: planted mirrors co-cluster."""

@@ -177,74 +177,6 @@ def test_batched_minhash_simhash_bit_exact():
             assert hashes[i] == simhash64(a), i
 
 
-def test_verify_cosine_matches_r5_barrier_and_evaluates_udf_once(spark):
-    # the r6 parity path scores through a nondeterministic pandas-UDF
-    # column; results must equal the r5 mapInPandas barrier exactly and
-    # the plan must hold exactly ONE ArrowEvalPython (no CollapseProject
-    # duplication under the keep comparison / where(keep))
-    import pandas as pd
-    from dedup.config import PARITY_CONFIG
-    from dedup.lsh import candidate_pairs
-    from dedup.queries import docs_as_corpus
-    from dedup.signature import signatures_table
-    from dedup.verify import (_VERIFIED_SCHEMA, cosine_similarity,
-                              verify_pairs)
-
-    def old_verify(pairs, signatures, cfg):
-        sig = (signatures.select("url", "minhash")
-               .where(F.col("minhash").isNotNull()))
-        sa = sig.select(F.col("url").alias("a"),
-                        F.col("minhash").alias("_sig_a"))
-        sb = sig.select(F.col("url").alias("b"),
-                        F.col("minhash").alias("_sig_b"))
-        url_exact = (pairs.where(F.col("match_source") == "url_exact")
-                     .select("a", "b", "match_source",
-                             F.lit(1.0).alias("similarity"),
-                             F.lit(1.0).alias("jaccard"),
-                             F.lit(True).alias("keep")))
-        joined = (pairs.where(F.col("match_source") != "url_exact")
-                  .join(sa, "a").join(sb, "b"))
-        threshold = cfg.threshold
-
-        def score_cosine(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                sims = np.array([cosine_similarity(x, y) for x, y in
-                                 zip(pdf["_sig_a"], pdf["_sig_b"])])
-                yield pd.DataFrame({
-                    "a": pdf["a"], "b": pdf["b"],
-                    "match_source": pdf["match_source"],
-                    "similarity": sims,
-                    "jaccard": np.full(len(pdf), np.nan),
-                    "keep": sims >= threshold,
-                })
-
-        scored = joined.mapInPandas(score_cosine, schema=_VERIFIED_SCHEMA)
-        return url_exact.unionByName(scored)
-
-    sigs = signatures_table(docs_as_corpus(spark, SF), PARITY_CONFIG)
-    pairs = candidate_pairs(sigs, PARITY_CONFIG).persist()
-    pairs.count()
-    o, n = (old_verify(pairs, sigs, PARITY_CONFIG),
-            verify_pairs(pairs, sigs, PARITY_CONFIG))
-    assert str(o.schema) == str(n.schema)
-
-    def norm(rows):
-        # raw values on purpose: the old barrier's np.nan became NULL
-        # through pandas→Arrow, and a NaN literal would NOT equal it
-        return sorted((r["a"], r["b"], r["match_source"],
-                       r["similarity"], r["jaccard"], r["keep"])
-                      for r in rows)
-
-    assert norm(o.collect()) == norm(n.collect())
-    plan = (n.where("keep")._jdf.queryExecution().executedPlan()
-            .toString())
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
-    pairs.unpersist()
-
-
 def test_domain_stats_matches_r5_formulation(spark):
     # r6 rolls every output column up from one (domain, md5) aggregation;
     # must equal the old two-aggregation + join formulation exactly
