@@ -31,7 +31,7 @@ from pyspark.sql.types import DoubleType
 from dedup.coeffs import load_coeffs
 from dedup.config import DedupConfig, minhash_prefilter_min_equal
 from dedup.local_oracle import xxh64_band_key
-from dedup.lsh import key_rank_col, match_source_from_rank, unified_group_keys
+from dedup.lsh import band_keys, key_rank_col, match_source_from_rank
 from dedup.normalize import (description_block_key, is_valid_field,
                              normalize_url, title_block_keys)
 from dedup.signature import (SHINGLES_DROPPED, _shingle_array,
@@ -219,14 +219,6 @@ def find_duplicates(source: SourceMetadata, candidates: DataFrame,
 _LOOKUP_SCHEMA = "node_url string, similarity double, match_source string"
 
 
-def _txt_keys(title_keys, desc_key: str | None) -> list[str]:
-    """Metadata blocking keys in the unified key table's gk_txt form."""
-    keys = [f"t:{k}" for k in title_keys]
-    if desc_key is not None:
-        keys.append(f"d:{desc_key}")
-    return keys
-
-
 def _source_score_udf(src: np.ndarray, use_jaccard: bool):
     """Arrow UDF (vectors, signed) -> each candidate's score against the
     driver-held source vector `src`, through the same batched kernels as
@@ -259,38 +251,89 @@ def _source_score_udf(src: np.ndarray, use_jaccard: bool):
     return F.arrow_udf(_score, "double").asNondeterministic()
 
 
+def _lookup_rank(cfg: DedupConfig, src_bands: list[int],
+                 url_keys: list[str], title_keys: list[str],
+                 desc_key: str | None):
+    """Best key rank of one signatures row against the source's keys, read
+    off the row's own columns: 0 norm_url or norm_redirect is a source url
+    key, 1 a band key (lsh.band_keys) is a source band key, 2 a title key
+    is a source title key, 3 desc_key is the source description key; NULL
+    when no key is shared. The ranks are lsh.key_rank_col's."""
+    ranked = []
+    if url_keys:
+        ranked.append((0, F.col("norm_url").isin(url_keys)
+                       | F.col("norm_redirect").isin(url_keys)))
+    if src_bands:
+        ranked.append((1, F.exists(band_keys(cfg),
+                                   lambda k: k.isin(src_bands))))
+    if title_keys:
+        ranked.append((2, F.exists("title_keys",
+                                   lambda t: t.isin(title_keys))))
+    if desc_key is not None:
+        ranked.append((3, F.col("desc_key") == desc_key))
+    rank = F.lit(None).cast("int")
+    for r, shared in reversed(ranked):
+        rank = F.when(shared, F.lit(r)).otherwise(rank)
+    return rank
+
+
 def _score_lookup(signatures: DataFrame, cfg: DedupConfig,
                   key_index: DataFrame | None, scoring: str | None,
                   src_sig, src_shingles, url_keys: list[str],
-                  txt_keys: list[str], exclude: str | None = None
-                  ) -> DataFrame:
+                  title_keys: list[str], desc_key: str | None,
+                  exclude: str | None = None) -> DataFrame:
     """Shared tail of dedupe_one and dedupe_metadata, the engine twin of
     local_oracle._score_candidates: candidates share any blocking key with
     the source (band keys derived here from src_sig, plus the url and
     metadata keys) and carry their best key rank. url_exact short-circuits
     to 1.0; the rest are scored against the driver-held source vectors —
     cosine >= cfg.threshold, or with scoring="jaccard" exact Jaccard >=
-    cfg.jaccard_threshold — rounded to 4 dp, in (-sim, url) order."""
+    cfg.jaccard_threshold — rounded to 4 dp, in (-sim, url) order.
+
+    Without `key_index` the candidates are one projection over
+    `signatures`: each row's rank comes from its own key columns
+    (`_lookup_rank`), so the plan has no per-key rows, no aggregate and no
+    join, and reads the signatures once. With `key_index` the index rows
+    are filtered by the source's keys, reduced to each url's min rank and
+    joined back to `signatures`, because the index carries no vectors;
+    that is the only reason the two candidate plans differ. Both assume
+    one signatures row per url (latest_signatures, the pipeline's
+    signatures stage). With a repeated url the no-index plan ranks and
+    scores each row on its own keys, so a row that shares no key with the
+    source is no candidate, while the key_index plan gives every row of
+    the url the url's best rank.
+
+    The result is tiny, so one partition sorted within itself gives the
+    total order: no range-partition sample job, and the score UDF runs
+    once."""
     use_jaccard = scoring == "jaccard"
-    band_keys: list[int] = []
+    src_bands: list[int] = []
     if src_sig is not None:
         r = cfg.lsh_rows
-        band_keys = [xxh64_band_key(i, src_sig[i * r:(i + 1) * r])
+        src_bands = [xxh64_band_key(i, src_sig[i * r:(i + 1) * r])
                      for i in range(cfg.lsh_bands)]
-    if not (band_keys or url_keys or txt_keys):
+    if not (src_bands or url_keys or title_keys or desc_key is not None):
         return signatures.sparkSession.createDataFrame([], _LOOKUP_SCHEMA)
 
-    keys = (key_index if key_index is not None
-            else unified_group_keys(signatures, cfg))
-    cands = keys.where(F.col("gk_band").isin(band_keys)
-                       | F.col("gk_url").isin(url_keys)
-                       | F.col("gk_txt").isin(txt_keys))
-    if exclude is not None:
-        cands = cands.where(F.col("url") != exclude)
-    cands = cands.groupBy("url").agg(F.min(key_rank_col()).alias("_rank"))
-    vec = "shingles" if use_jaccard else "minhash"
     sig_cols = ["url", "minhash"] + (["shingles"] if use_jaccard else [])
-    joined = cands.join(signatures.select(*sig_cols), "url")
+    if key_index is None:
+        cands = signatures.select(
+            *sig_cols, _lookup_rank(cfg, src_bands, url_keys, title_keys,
+                                    desc_key).alias("_rank"))
+        cands = cands.where(F.col("_rank").isNotNull())
+        if exclude is not None:
+            cands = cands.where(F.col("url") != exclude)
+    else:
+        txt_keys = [f"t:{k}" for k in title_keys] + (
+            [f"d:{desc_key}"] if desc_key is not None else [])
+        keys = key_index.where(F.col("gk_band").isin(src_bands)
+                               | F.col("gk_url").isin(url_keys)
+                               | F.col("gk_txt").isin(txt_keys))
+        if exclude is not None:
+            keys = keys.where(F.col("url") != exclude)
+        cands = (keys.groupBy("url").agg(F.min(key_rank_col()).alias("_rank"))
+                 .join(signatures.select(*sig_cols), "url"))
+    vec = "shingles" if use_jaccard else "minhash"
     rank0 = F.col("_rank") == 0
 
     score = F.lit(None).cast("double")  # no source signature: url_exact only
@@ -310,14 +353,14 @@ def _score_lookup(signatures: DataFrame, cfg: DedupConfig,
             est = F.size(F.filter(F.zip_with("minhash", src_arr,
                                              lambda x, y: x == y),
                                   lambda v: v))
-            joined = joined.where(
+            cands = cands.where(
                 rank0 | F.col("shingles").isNull()
                 | (est >= F.lit(minhash_prefilter_min_equal(cfg))))
         score = _source_score_udf(src, use_jaccard)(
             vec, F.col("minhash").isNotNull())
 
     threshold = cfg.jaccard_threshold if use_jaccard else cfg.threshold
-    scored = joined.select(
+    scored = cands.select(
         F.col("url").alias("node_url"),
         F.when(rank0, F.lit(1.0)).otherwise(score).alias("similarity"),
         match_source_from_rank(F.col("_rank")).alias("match_source"))
@@ -327,7 +370,8 @@ def _score_lookup(signatures: DataFrame, cfg: DedupConfig,
                    | (F.col("similarity") >= F.lit(threshold)))
             .select("node_url", F.round("similarity", 4).alias("similarity"),
                     "match_source")
-            .orderBy(F.desc("similarity"), F.asc("node_url")))
+            .repartition(1)
+            .sortWithinPartitions(F.desc("similarity"), F.asc("node_url")))
 
 
 def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
@@ -338,9 +382,9 @@ def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
     `/detect/hash/by-metadata` (app/main.py:534-613): the source document is
     NOT in the corpus; its signature and blocking keys are computed
     driver-side from the given title/description/url (T9a semantics:
-    valid fields only), candidates come from the same band-key/url-key
-    semi-join as `dedupe_one`, and scoring is the reference cosine against
-    the source signature (`_score_lookup`).
+    valid fields only), candidates are the rows that share a band, url,
+    title or description key with it, as in `dedupe_one`, and scoring is
+    the reference cosine against the source signature (`_score_lookup`).
 
     Returns (node_url, similarity, match_source) like `dedupe_one`.
 
@@ -366,16 +410,17 @@ def dedupe_metadata(signatures: DataFrame, source: SourceMetadata,
     # metadata blocking keys (reference title / description-prefix
     # candidate searches, app/wlo_client.py:265-311) — only useful when the
     # corpus signatures carry the matching key columns
-    txt_keys: list[str] = []
+    title_keys: list[str] = []
+    desc_key = None
     if "title_keys" in signatures.columns:
-        txt_keys = _txt_keys(title_block_keys(source.title),
-                             description_block_key(source.description))
+        title_keys = title_block_keys(source.title)
+        desc_key = description_block_key(source.description)
     # same shingling as signatures_table (signature._shingle_array) so the
     # driver-side source set can't drift from the stored arrays
     src_shingles = (np.sort(_shingle_array(tokenize(text), cfg))
                     if use_jaccard and src_sig is not None else None)
     return _score_lookup(signatures, cfg, key_index, scoring, src_sig,
-                         src_shingles, url_keys, txt_keys)
+                         src_shingles, url_keys, title_keys, desc_key)
 
 
 def build_candidate_stats(search_info: DataFrame,
@@ -413,22 +458,24 @@ def dedupe_one(signatures: DataFrame, url: str,
                scoring: str | None = None) -> DataFrame:
     """Per-key corpus query — the reference's `/detect/hash/by-node`
     (app/main.py:499-531) against the corpus signatures table: point-lookup
-    the source row, restrict candidates to documents sharing any LSH band
-    key or normalized-URL key with it (the band-key semi-join replaces the
-    reference's remote candidate search, SURVEY §3.4), score with the
-    reference cosine kernel, and exclude the source itself
+    the source row, restrict candidates to documents sharing any LSH band,
+    normalized-URL, title or description key with it (this key match
+    replaces the reference's remote candidate search, SURVEY §3.4), score
+    with the reference cosine kernel, and exclude the source itself
     (app/wlo_client.py:377-381 semantics).
 
     Returns (node_url, similarity, match_source) for candidates that are
     url_exact or score >= threshold, similarity rounded to 4 dp like the
     reference boundary (app/hash_detector.py:303).
 
-    Scale shape: the source row is collected once; its ~b+2 keys filter
-    one scan of the key table and its vectors score the candidates
-    (`_score_lookup`). Pass `key_index` (the persisted inverted key table
-    built by DedupPipeline.run(build_key_index=True), sorted by key so the
-    IN-list filter prunes parquet row groups) to skip re-exploding the
-    signatures per query.
+    Scale shape: the source row is collected once; one scan of the
+    signatures ranks every row against the source's ~b+2 keys from the
+    row's own columns (no per-key rows, aggregate or join) and its vectors
+    score the candidates (`_score_lookup`). Pass `key_index` (the
+    persisted inverted key table built by
+    DedupPipeline.run(build_key_index=True), sorted by key so the IN-list
+    filter prunes parquet row groups) to read only the candidates'
+    signatures rows, joined back by url, instead of scanning them all.
 
     `scoring` picks the keep semantics: None/"cosine" (default) is the
     reference cosine decision regardless of cfg.scoring, so the two
@@ -454,11 +501,11 @@ def dedupe_one(signatures: DataFrame, url: str,
     src = src_rows[0]
     url_keys = sorted({n for n in (src["norm_url"], src["norm_redirect"])
                        if n is not None})
-    txt_keys = (_txt_keys(src["title_keys"] or [], src["desc_key"])
-                if has_meta else [])
+    title_keys = (src["title_keys"] or []) if has_meta else []
+    desc_key = src["desc_key"] if has_meta else None
     return _score_lookup(signatures, cfg, key_index, scoring, src["minhash"],
                          src["shingles"] if use_jaccard else None,
-                         url_keys, txt_keys, exclude=url)
+                         url_keys, title_keys, desc_key, exclude=url)
 
 
 def candidates_df_from_pools(spark, pools: dict[str, list[dict]]) -> DataFrame:

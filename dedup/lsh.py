@@ -185,18 +185,31 @@ def match_source_from_rank(rank_col):
             .otherwise(F.lit("description")))
 
 
+def band_keys(cfg: DedupConfig):
+    """The row's b band keys as one array column: band i is ONE xxhash64
+    over (i, minhash[i*r : (i+1)*r]). NULL when minhash is NULL (xxhash64
+    skips null inputs, so an unguarded transform would hash the band id
+    alone). The one definition shared by the key table
+    (unified_group_keys) and the lookups (kernel._score_lookup); the
+    driver-side twin is local_oracle.xxh64_band_key."""
+    b, r = cfg.lsh_bands, cfg.lsh_rows
+    return F.when(F.col("minhash").isNotNull(), F.transform(
+        F.sequence(F.lit(0), F.lit(b - 1)),
+        lambda i: F.xxhash64(i, F.slice("minhash", i * r + 1, F.lit(r)))))
+
+
 def unified_group_keys(signatures: DataFrame, cfg: DedupConfig,
                        with_simhash: bool = False) -> DataFrame:
     """(url, gk_band BIGINT?, gk_url STRING?, gk_txt STRING?): ALL blocking
     keys in one scan, exactly one of the three columns non-null per row.
 
-    Band keys are ONE xxhash64 over (band_id, band slice) — an 8-byte
-    shuffle key instead of the ~24-byte '<band>:<hash>' string concat (a
-    band key is already a hash, so folding the band id into it is free;
-    cross-band collisions are 2^-64 and land in the verify stage anyway).
-    Normalized-URL keys stay EXACT strings in their own column — never
-    hashed, so a url_exact pair can never be a hash collision — and exist
-    for every document incl. signature-less ones.
+    Band keys (`band_keys`) are ONE xxhash64 over (band_id, band slice) —
+    an 8-byte shuffle key instead of the ~24-byte '<band>:<hash>' string
+    concat (a band key is already a hash, so folding the band id into it
+    is free; cross-band collisions are 2^-64 and land in the verify stage
+    anyway). Normalized-URL keys stay EXACT strings in their own column —
+    never hashed, so a url_exact pair can never be a hash collision — and
+    exist for every document incl. signature-less ones.
 
     gk_txt carries the metadata blocking keys when the signatures table has
     them (title/normalized-title as 't:<key>', description prefix as
@@ -209,41 +222,39 @@ def unified_group_keys(signatures: DataFrame, cfg: DedupConfig,
     the engine's Hamming gate can run inside the pair expansion without a
     join back to the signatures table; the persisted key index keeps the
     slim schema."""
-    b, r = cfg.lsh_bands, cfg.lsh_rows
-    has_txt = "title_keys" in signatures.columns
-    mk = ("struct({band} AS gk_band, {url} AS gk_url, {txt} AS gk_txt)"
-          .format)
-    null_b = "CAST(NULL AS BIGINT)"
-    null_s = "CAST(NULL AS STRING)"
+    null_b = F.lit(None).cast("bigint")
+    null_s = F.lit(None).cast("string")
+
+    def key(band=null_b, url=null_s, txt=null_s):
+        return F.struct(band.alias("gk_band"), url.alias("gk_url"),
+                        txt.alias("gk_txt"))
+
+    def one_key(col: str, **kind):
+        return F.when(F.col(col).isNotNull(), F.array(key(**kind)))
+
     # (persisting precomputed band keys in the signatures table was
     # benchmarked: the re-derivation is scan-bound, not hash-bound, so the
     # stored column gave no wall win and was not taken)
-    parts = [
-        f"CASE WHEN minhash IS NOT NULL THEN transform(sequence(0, {b - 1}), "
-        f"i -> {mk(band=f'xxhash64(i, slice(minhash, i * {r} + 1, {r}))', url=null_s, txt=null_s)}) "
-        "ELSE array() END",
-        "CASE WHEN norm_url IS NOT NULL THEN "
-        f"array({mk(band=null_b, url='norm_url', txt=null_s)}) ELSE array() END",
-        "CASE WHEN norm_redirect IS NOT NULL THEN "
-        f"array({mk(band=null_b, url='norm_redirect', txt=null_s)}) ELSE array() END",
-    ]
-    if has_txt:
-        t_key = mk(band=null_b, url=null_s, txt="concat('t:', t)")
-        d_key = mk(band=null_b, url=null_s, txt="concat('d:', desc_key)")
-        parts.append(
-            "CASE WHEN title_keys IS NOT NULL THEN transform(title_keys, "
-            f"t -> {t_key}) ELSE array() END")
-        parts.append(
-            f"CASE WHEN desc_key IS NOT NULL THEN array({d_key}) "
-            "ELSE array() END")
-    entries = "concat(" + ", ".join(parts) + ")"
+    parts = [F.transform(band_keys(cfg), lambda k: key(band=k)),
+             one_key("norm_url", url=F.col("norm_url")),
+             one_key("norm_redirect", url=F.col("norm_redirect"))]
+    if "title_keys" in signatures.columns:
+        parts.append(F.transform(
+            "title_keys", lambda t: key(txt=F.concat(F.lit("t:"), t))))
+        parts.append(one_key(
+            "desc_key", txt=F.concat(F.lit("d:"), F.col("desc_key"))))
+    # a missing key family is an empty array, not a NULL that would null
+    # the whole concat
+    empty = F.array().cast(
+        "array<struct<gk_band:bigint,gk_url:string,gk_txt:string>>")
+    entries = F.concat(*[F.coalesce(p, empty) for p in parts])
     out_cols = ["url", "k.gk_band", "k.gk_url", "k.gk_txt"]
     sel_cols = ["url"]
     if with_simhash:
         out_cols.append("simhash")
         sel_cols.append("simhash")
     return (signatures
-            .select(*sel_cols, F.explode(F.expr(entries)).alias("k"))
+            .select(*sel_cols, F.explode(entries).alias("k"))
             .select(*out_cols))
 
 

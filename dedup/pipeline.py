@@ -29,7 +29,9 @@ Every job a stage runs carries the job tag `dedup-stage:<stage>`.
 The verified stage runs one driver step before its write:
 `verify.broadcast_signatures`, one bounded collect of the signed rows that
 gates the broadcast verify plan (the pairs read once, scored by row index
-against one broadcast signature matrix). Its job carries the stage's tag;
+against one broadcast signature matrix). When the signatures stage ran in
+the same pass, its footer row count bounds the collect and it plans no
+limit; a resumed stage keeps the limit. Its job carries the stage's tag;
 the stage destroys the broadcast after the write. Over the gate's bound
 the join plan runs.
 
@@ -240,8 +242,9 @@ class DedupPipeline:
         inverted key table (url, gk_band, gk_url, gk_txt) range-partitioned
         and sorted by key: per-document queries (`dedupe_one` /
         `dedupe_metadata` / jobs/detect.py --key-index) then resolve their
-        ~b+2-key IN-list against parquet min/max stats instead of
-        re-exploding the signatures table per query."""
+        ~b+2-key IN-list against parquet min/max stats, and read only the
+        candidates' signatures rows (a join by url), instead of ranking
+        every signatures row against the source's keys in one scan."""
         has_html = "html" in corpus.columns
         signatures = self._run_stage(
             "signatures",
@@ -249,6 +252,9 @@ class DedupPipeline:
                 corpus, self.cfg,
                 extract_html_col="html" if has_html else None,
                 emit_text=True))
+        # the stage's footer row count lets the verify gate collect
+        # without a limit; -1 when the stage was resumed
+        sig_rows = self.stage_infos[-1].rows
         extracted = signatures.select("url", "text")
         keys = None
         if build_key_index:
@@ -271,7 +277,8 @@ class DedupPipeline:
         sig_broadcast = []
 
         def build_verified():
-            sig_broadcast.append(broadcast_signatures(signatures, self.cfg))
+            sig_broadcast.append(broadcast_signatures(signatures, self.cfg,
+                                                      n_rows=sig_rows))
             return verify_pairs(pairs, signatures, self.cfg,
                                 sig_broadcast=sig_broadcast[0]).observe(
                 verified_funnel, *verified_funnel_columns())

@@ -1147,8 +1147,9 @@ def q_metadata_enrich(spark, sf_dir):
 
 def q_dedupe_one_url(spark, sf_dir):
     """M8 per-key query (`/detect/hash/by-node` analog): duplicates of ONE
-    url against the corpus signatures table via band-key semi-join,
-    excluding self. Oracle: VALUES fixture from the single-node kernel."""
+    url against the corpus signatures table (rows sharing a band or url
+    key with it, ranked in one scan), excluding self. Oracle: VALUES
+    fixture from the single-node kernel."""
     from dedup.kernel import dedupe_one
     c = docs_as_corpus(spark, sf_dir)
     s = signatures_table(c, PARITY_CONFIG)
@@ -1158,7 +1159,7 @@ def q_dedupe_one_url(spark, sf_dir):
 def q_dedupe_by_metadata(spark, sf_dir):
     """M9 ad-hoc by-metadata query (`/detect/hash/by-metadata` analog):
     a source document NOT in the corpus (title = text of doc 3), scored
-    against the corpus signatures via the same key semi-join. Expected:
+    against the corpus signatures via the same key match. Expected:
     doc 3 AND its planted mirror at cosine 1.0. Oracle: VALUES fixture
     from the single-node kernel."""
     from dedup.kernel import SourceMetadata, dedupe_metadata

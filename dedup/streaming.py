@@ -225,6 +225,9 @@ _ASSIGN_MANIFEST = "assignments_manifest.json"
 # lands a full assignment copy, so an unbounded history would grow disk as
 # O(drops x corpus); the latest KEEP_ASSIGNMENT_VERSIONS stay readable
 KEEP_ASSIGNMENT_VERSIONS = 10
+# every snapshot is read with this declared schema: a schema-inferring
+# parquet read launches one Spark job
+ASSIGNMENT_SCHEMA = "url string, cluster_id string"
 
 
 def _read_assign_manifest(workdir: str) -> dict | None:
@@ -275,17 +278,20 @@ def read_assignments(spark, workdir: str, version: int | None = None):
     ingest fold lands in a fresh versioned dir; on an Iceberg deployment
     these map to table snapshots and this function to VERSION AS OF; the
     last KEEP_ASSIGNMENT_VERSIONS are retained, older snapshots are
-    expired). Raises KeyError for an unknown/expired version."""
+    expired). Raises KeyError for an unknown/expired version. Reading
+    starts no Spark job: the snapshot is read with ASSIGNMENT_SCHEMA."""
     man = _read_assign_manifest(workdir)
     if man is not None:
         v = man["latest"] if version is None else int(version)
         if v not in set(int(x) for x in man["versions"]):
             raise KeyError(f"assignment version {v} not in "
                            f"{sorted(man['versions'])}")
-        return spark.read.parquet(f"{workdir}/assignments_v{v}")
-    if version is not None:
+        path = f"{workdir}/assignments_v{v}"
+    elif version is not None:
         raise KeyError("workdir has no assignment snapshots")
-    return spark.read.parquet(f"{workdir}/assignments")
+    else:
+        path = f"{workdir}/assignments"
+    return spark.read.schema(ASSIGNMENT_SCHEMA).parquet(path)
 
 
 def _write_assignment_version(df, workdir: str,

@@ -140,7 +140,8 @@ def minhash_estimate_equal_count_col(sig_a="_sig_a", sig_b="_sig_b"):
         f"size(filter(zip_with({sig_a}, {sig_b}, (x, y) -> x = y), v -> v))")
 
 
-def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig):
+def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig,
+                         n_rows: int = -1):
     """The gate step of the broadcast verify plan: ONE bounded collect of
     the signed (url, minhash) rows -> a Spark broadcast of
     (pd.Index of urls, (n, num_hashes) float64 matrix) for
@@ -150,7 +151,12 @@ def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig):
     - more than spark.sql.autoBroadcastJoinThreshold // (8 * num_hashes)
       rows are signed, i.e. the matrix exceeds the planner's own broadcast
       budget (a threshold of -1 means no broadcast). The collect reads at
-      most bound + 1 rows, like `connected_components`' gate;
+      most bound + 1 rows, like `connected_components`' gate, unless the
+      caller passes the table's total row count `n_rows` (the pipeline's
+      footer count of the signatures stage it just wrote; -1 when
+      unknown) and it is within the bound: total rows >= signed rows, so
+      the collect then needs no limit, whose CollectLimit would add a
+      single-partition exchange;
     - a signed url repeats: the join emits one row per matching signature
       row, which a url -> row index cannot reproduce.
     The caller owns the broadcast and destroy()s it after its write. A
@@ -165,9 +171,11 @@ def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig):
     if budget < 0:
         return None
     bound = budget // (8 * cfg.num_hashes)
-    signed = (signatures.select("url", "minhash")
-              .where(F.col("url").isNotNull() & F.col("minhash").isNotNull())
-              .limit(bound + 1).toArrow())
+    rows = (signatures.select("url", "minhash")
+            .where(F.col("url").isNotNull() & F.col("minhash").isNotNull()))
+    if not 0 <= n_rows <= bound:
+        rows = rows.limit(bound + 1)
+    signed = rows.toArrow()
     if signed.num_rows > bound:
         return None
     urls = pd.Index(signed.column("url").to_numpy())

@@ -149,49 +149,6 @@ def test_dup_clusters_engine_mirrors_cluster_together(spark):
         assert cid <= url  # component-minimum id
 
 
-def test_key_index_stage_and_point_queries(spark, tmp_path):
-    """DedupPipeline(build_key_index=True) persists the inverted key table;
-    dedupe_one / dedupe_metadata through it return the same rows as the
-    on-the-fly key derivation, and resume skips the extra stage."""
-    from dedup.config import PARITY_CONFIG
-    from dedup.kernel import SourceMetadata, dedupe_metadata, dedupe_one
-    from dedup.pipeline import DedupPipeline
-    from dedup.queries import docs_as_corpus
-
-    corpus = docs_as_corpus(spark, SF)
-    wd = str(tmp_path / "wd")
-    p = DedupPipeline(spark, wd, PARITY_CONFIG)
-    tables = p.run(corpus, build_key_index=True)
-    assert "keys" in tables
-    assert [s.name for s in p.stage_infos] == [
-        "signatures", "keys", "pairs", "verified", "clusters"]
-
-    sigs = tables["signatures"]
-    keys = tables["keys"]
-    url = "https://mirror.net/copy/7"
-    direct = {tuple(r) for r in dedupe_one(sigs, url, PARITY_CONFIG).collect()}
-    indexed = {tuple(r) for r in dedupe_one(
-        sigs, url, PARITY_CONFIG, key_index=keys).collect()}
-    assert direct == indexed and direct
-
-    doc_text = corpus.where("doc_id = 3").limit(1).collect()[0]["text"]
-    src = SourceMetadata(title=doc_text)
-    direct_m = {tuple(r) for r in dedupe_metadata(
-        sigs, src, PARITY_CONFIG).collect()}
-    indexed_m = {tuple(r) for r in dedupe_metadata(
-        sigs, src, PARITY_CONFIG, key_index=keys).collect()}
-    assert direct_m == indexed_m and direct_m
-
-    # resume skips the keys stage too; invalidate clears its manifest
-    p2 = DedupPipeline(spark, wd, PARITY_CONFIG)
-    p2.run(corpus, build_key_index=True)
-    assert all(s.skipped for s in p2.stage_infos)
-    p2.invalidate()
-    p3 = DedupPipeline(spark, wd, PARITY_CONFIG)
-    p3.run(corpus, build_key_index=True)
-    assert not any(s.skipped for s in p3.stage_infos)
-
-
 def test_minhash_signatures_engine_matches_local(spark):
     from dedup import local_oracle as lo
     from dedup.config import ENGINE_CONFIG

@@ -206,55 +206,6 @@ def test_ivf_index_artifact_roundtrip_and_mismatch(spark, tmp_path):
         load_ivf_index(spark, path, expect)
 
 
-# --- per-document queries: --scoring jaccard --------------------------------
-
-def test_dedupe_one_jaccard_scoring(spark):
-    from dedup.config import ENGINE_CONFIG
-    from dedup.kernel import dedupe_one
-    from dedup.queries import docs_as_corpus
-    from dedup.signature import signatures_table
-
-    sigs = signatures_table(docs_as_corpus(spark, SF), ENGINE_CONFIG)
-    url = "https://mirror.net/copy/7"
-    cos = {r["node_url"]: r["similarity"]
-           for r in dedupe_one(sigs, url, ENGINE_CONFIG).collect()}
-    jac = {r["node_url"]: r["similarity"]
-           for r in dedupe_one(sigs, url, ENGINE_CONFIG,
-                               scoring="jaccard").collect()}
-    # the mirrored original is an exact text dup: found by both scorings,
-    # jaccard exactly 1.0
-    assert any(v == 1.0 for v in jac.values())
-    assert jac and cos
-    # jaccard keep set is a subset of cosine's here (0.8 exact Jaccard is
-    # far stricter than 0.9 cosine on positive minhash vectors)
-    assert set(jac) <= set(cos)
-
-
-def test_dedupe_metadata_jaccard_scoring(spark):
-    from dedup.config import ENGINE_CONFIG
-    from dedup.kernel import SourceMetadata, dedupe_metadata
-    from dedup.queries import docs_as_corpus
-    from dedup.signature import signatures_table
-
-    c = docs_as_corpus(spark, SF)
-    text = c.where("url like '%/docs/3'").first()["text"]
-    sigs = signatures_table(c, ENGINE_CONFIG)
-    got = dedupe_metadata(sigs, SourceMetadata(title=text), ENGINE_CONFIG,
-                          scoring="jaccard").collect()
-    assert got and all(r["similarity"] >= 0.8 for r in got)
-
-    # a parity signatures table has no shingles -> loud error, not wrong answers
-    from dedup.config import PARITY_CONFIG
-    slim = signatures_table(c, PARITY_CONFIG)
-    with pytest.raises(ValueError, match="shingle"):
-        dedupe_metadata(slim, SourceMetadata(title=text), PARITY_CONFIG,
-                        scoring="jaccard")
-    with pytest.raises(ValueError, match="shingle"):
-        from dedup.kernel import dedupe_one
-        dedupe_one(slim, "https://mirror.net/copy/7", PARITY_CONFIG,
-                   scoring="jaccard")
-
-
 # --- training-pipeline extras: decontamination + repetition gate -------------
 
 def _duck(sf, sql):

@@ -342,3 +342,39 @@ def test_idle_ingest_drop_changes_nothing(spark, tmp_path):
         runs.append(({(r["url"], r["cluster_id"]) for r in rows},
                      list_assignment_versions(wd)))
     assert runs[0][0] and runs[1] == runs[0]
+
+
+def test_read_assignments_starts_no_job(spark, tmp_path):
+    """Every assignment snapshot is read with the declared schema, so
+    read_assignments launches no Spark job (a schema-inferring parquet
+    read launches one), for a versioned workdir, an as-of version and a
+    legacy flat `assignments` dir, and each returns the rows written."""
+    import uuid
+
+    from dedup.streaming import _write_assignment_version, read_assignments
+    from test_pipeline_resume import _clear_job_group, _settle
+
+    rows = [("https://x.example/1", "https://x.example/1"),
+            ("https://x.example/2", "https://x.example/1"),
+            ("https://x.example/3", "https://x.example/3")]
+    df = spark.createDataFrame(rows, "url string, cluster_id string")
+    legacy = str(tmp_path / "legacy")
+    df.write.parquet(f"{legacy}/assignments")
+    versioned = str(tmp_path / "versioned")
+    _write_assignment_version(df.limit(1), versioned)
+    _write_assignment_version(df, versioned)
+
+    sc = spark.sparkContext
+    group = f"read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read")
+    try:
+        frames = [read_assignments(spark, legacy),
+                  read_assignments(spark, versioned),
+                  read_assignments(spark, versioned, 1)]
+    finally:
+        _clear_job_group(sc)
+    _settle(spark)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    got = [sorted(tuple(r) for r in f.collect()) for f in frames]
+    assert got == [rows, rows, rows[:1]]
+    assert all(f.columns == ["url", "cluster_id"] for f in frames)

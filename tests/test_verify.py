@@ -235,6 +235,58 @@ def test_broadcast_gate_falls_back_to_the_join(spark):
     assert broadcast_signatures(engine_sigs, ENGINE_CONFIG) is None
 
 
+def test_gate_with_a_row_count_within_the_bound_collects_without_limit(
+        spark, monkeypatch):
+    """Given the table's row count, the gate returns the same broadcast
+    and the same None cases, and its collect plans no CollectLimit when
+    the count is within the bound; without a count, with -1 (a resumed
+    stage's) or with a count over the bound it keeps the limit."""
+    pdf = corpus_pdf(40, seed=11, hot_frac=0.0)
+    sigs = signatures_table(
+        spark.createDataFrame(pdf[["url", "text"]]), PARITY_CONFIG
+    ).localCheckpoint()
+    n_rows = sigs.count()
+    n = sigs.where("minhash is not null").count()
+    plans = []
+    to_arrow = type(sigs).toArrow
+
+    def recording_to_arrow(df):
+        out = to_arrow(df)
+        plans.append("CollectLimit" in
+                     df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(type(sigs), "toArrow", recording_to_arrow)
+    row_bytes = 8 * PARITY_CONFIG.num_hashes
+    saved = spark.conf.get(THRESHOLD_KEY)
+    try:
+        spark.conf.set(THRESHOLD_KEY, str(row_bytes * n_rows))
+        values = []
+        for count in ({}, {"n_rows": -1}, {"n_rows": n_rows}):
+            bc = broadcast_signatures(sigs, PARITY_CONFIG, **count)
+            index, matrix = bc.value
+            values.append((list(index), matrix))
+            bc.destroy()
+        assert plans == [True, True, False]
+        for index, matrix in values[1:]:
+            assert index == values[0][0]
+            assert np.array_equal(matrix, values[0][1])
+        assert len(values[0][0]) == n
+        spark.conf.set(THRESHOLD_KEY, str(row_bytes * n - 1))
+        assert broadcast_signatures(sigs, PARITY_CONFIG,
+                                    n_rows=n_rows) is None
+        assert plans[-1] is True
+        spark.conf.set(THRESHOLD_KEY, "-1")
+        assert broadcast_signatures(sigs, PARITY_CONFIG,
+                                    n_rows=n_rows) is None
+    finally:
+        spark.conf.set(THRESHOLD_KEY, saved)
+    dup = sigs.unionByName(sigs.limit(1))
+    assert broadcast_signatures(dup, PARITY_CONFIG,
+                                n_rows=n_rows + 1) is None
+    assert plans[-1] is False
+
+
 class _PlanRecorder(Storage):
     """Records the physical plan of every frame the pipeline writes."""
 
