@@ -47,20 +47,16 @@ def entry(spark: SparkSession) -> DataFrame:
     _ensure_workers_can_import(spark)
     from pyspark.sql import functions as F
 
-    from dedup.cluster import assign_clusters
     from dedup.config import PARITY_CONFIG
-    from dedup.lsh import candidate_pairs
+    from dedup.pipeline import dedup_stages, local_checkpoint
     from dedup.queries import docs_as_corpus
     from dedup.signature import signatures_table
-    from dedup.verify import verify_pairs
 
     corpus = docs_as_corpus(spark, "/root/testdata/sf0.001")
-    sigs = signatures_table(corpus, PARITY_CONFIG)
-    pairs = candidate_pairs(sigs, PARITY_CONFIG)
-    verified = verify_pairs(pairs, sigs, PARITY_CONFIG).where("keep")
-    clusters = assign_clusters(corpus.select("url"),
-                               verified.select("a", "b"))
-    return (verified
+    sigs = signatures_table(corpus, PARITY_CONFIG).localCheckpoint()
+    _, verified, clusters = dedup_stages(sigs, PARITY_CONFIG,
+                                         local_checkpoint)
+    return (verified.where("keep")
             .join(clusters.withColumnRenamed("url", "a"), "a")
             .select("a", "b", "match_source",
                     F.round("similarity", 4).alias("similarity"),

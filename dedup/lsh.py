@@ -260,7 +260,6 @@ def unified_group_keys(signatures: DataFrame, cfg: DedupConfig,
 
 def candidate_pairs(signatures: DataFrame,
                     cfg: DedupConfig,
-                    use_simhash_prefilter: bool = False,
                     funnel: Observation | None = None) -> DataFrame:
     """Full candidate set: LSH ∪ url_exact in ONE key-emission pass — one
     signatures scan, one grouped pair-expansion shuffle, one labeling
@@ -272,22 +271,21 @@ def candidate_pairs(signatures: DataFrame,
     A pure plan, like pairs_within_groups; `funnel` is handed to it and
     observes the key funnel (keys -> singleton / cold / hot) on the first
     action over the result."""
-    # Engine mode: SimHash rides the key emission as a member payload so
-    # the Hamming gate runs INSIDE the pair-expansion codegen stage — the
-    # raw pair rows a boilerplate-heavy char-shingle banding emits
-    # (measured 17.4M at 100k docs vs 131k survivors) never reach the
-    # labeling aggregation's shuffle. url-key pair occurrences bypass the
-    # gate (url_exact scores 1.0 without a signature,
-    # app/hash_detector.py:263-266); a null simhash on either side fails
-    # the gate, exactly like the former join-based prefilter. NEVER
-    # applied in parity runs (the reference has no SimHash).
-    keys = unified_group_keys(signatures, cfg,
-                              with_simhash=use_simhash_prefilter)
+    # Engine mode (cfg.scoring "jaccard"): SimHash rides the key emission
+    # as a member payload so the Hamming gate runs INSIDE the
+    # pair-expansion codegen stage — the raw pair rows a boilerplate-heavy
+    # char-shingle banding emits (measured 17.4M at 100k docs vs 131k
+    # survivors) never reach the labeling aggregation's shuffle. url-key
+    # pair occurrences bypass the gate (url_exact scores 1.0 without a
+    # signature, app/hash_detector.py:263-266); a null simhash on either
+    # side fails the gate, exactly like the former join-based prefilter.
+    # NEVER applied in parity runs (the reference has no SimHash).
+    engine = cfg.scoring == "jaccard"
+    keys = unified_group_keys(signatures, cfg, with_simhash=engine)
     tagged = pairs_within_groups(
         keys, GROUP_KEY_COLS, cfg.band_bucket_cap, keep_keys=True,
-        payload_col="simhash" if use_simhash_prefilter else None,
-        funnel=funnel)
-    if use_simhash_prefilter:
+        payload_col="simhash" if engine else None, funnel=funnel)
+    if engine:
         tagged = (tagged.where(
             F.col("gk_url").isNotNull()
             | (F.bit_count(F.col("pa").bitwiseXOR(F.col("pb")))

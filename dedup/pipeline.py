@@ -26,14 +26,19 @@ the frame that was written; each funnel is an Observation that fills
 during its stage's write (the verified one on the written frame itself).
 Every job a stage runs carries the job tag `dedup-stage:<stage>`.
 
-The verified stage runs one driver step before its write:
-`verify.broadcast_signatures`, one bounded collect of the signed rows that
-gates the broadcast verify plan (the pairs read once, scored by row index
-against one broadcast signature matrix). When the signatures stage ran in
-the same pass, its footer row count bounds the collect and it plans no
-limit; a resumed stage keeps the limit. Its job carries the stage's tag;
-the stage destroys the broadcast after the write. Over the gate's bound
-the join plan runs.
+One builder, `dedup_stages`, composes signatures -> pairs -> verified ->
+clusters for this pipeline, the driver queries and `__spark_entry__`; the
+streaming fold and `q_clusters_incremental` use its verify step,
+`verified_stage`, alone. Each caller passes a `materialize(stage, build,
+funnel=None)` callback: this pipeline `_run_stage`, the driver queries
+`local_checkpoint`, the fold a persist pinned by one count().
+`verified_stage` runs the gate `verify.broadcast_signatures` inside the
+build, one bounded collect of the signed rows (with no limit when
+`n_signed`, the signatures stage's footer row count, is known); under its
+bound the pairs are read once and scored by row index against one
+broadcast signature matrix, over it the join plan runs. The gate's job
+carries the verified stage's tag, a resumed stage runs none, and the
+broadcast is destroyed when the caller leaves the stage's `with` block.
 
 Scale notes: stage boundaries are exactly the expensive shuffles (banding
 groupBy, pair join, label-prop iterations), so checkpoints double as shuffle
@@ -46,6 +51,7 @@ from __future__ import annotations
 
 import json
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -76,15 +82,59 @@ _TELEMETRY = ("executor_run_time_ms", "shuffle_read_bytes",
               "shuffle_write_bytes", "num_tasks")
 
 
-def verified_funnel_columns():
-    """The verified stage's funnel, observed on the frame it writes:
+def local_checkpoint(stage: str, build, funnel=None) -> DataFrame:
+    """The driver queries' `materialize`: an eager localCheckpoint."""
+    return build().localCheckpoint()
+
+
+@contextmanager
+def verified_stage(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
+                   materialize, n_signed: int = -1):
+    """Yields `materialize("verified", build, funnel)`. The build runs the
+    gate (`broadcast_signatures`, given the signatures' row count
+    `n_signed` when known), then `verify_pairs`, observed by the funnel:
     pairs, one count per match_source, scored (similarity not null) and
-    kept."""
-    return (F.count(F.lit(1)).alias("pairs"),
+    kept. The broadcast is destroyed on exit, so every read of a frame
+    whose lineage holds the verify plan (a persisted one too) belongs
+    inside the block; a localCheckpoint or a stage write cuts it."""
+    funnel = Observation()
+    sig_broadcast = None
+
+    def build():
+        nonlocal sig_broadcast
+        sig_broadcast = broadcast_signatures(signatures, cfg, n_rows=n_signed)
+        return verify_pairs(pairs, signatures, cfg,
+                            sig_broadcast=sig_broadcast).observe(
+            funnel, F.count(F.lit(1)).alias("pairs"),
             *(F.count_if(F.col("match_source") == src).alias(src)
               for src in ("url_exact", "lsh", "title", "description")),
             F.count("similarity").alias("scored"),
             F.count_if("keep").alias("kept"))
+
+    try:
+        yield materialize("verified", build, funnel)
+    finally:
+        if sig_broadcast is not None:
+            sig_broadcast.destroy()
+
+
+def dedup_stages(signatures: DataFrame, cfg: DedupConfig, materialize,
+                 n_signed: int = -1):
+    """signatures -> (pairs, verified, clusters), each stage built by
+    `materialize(stage, build, funnel=None)`: candidate pairs (with the
+    key-funnel Observation), `verified_stage`, and connected components
+    over the kept edges, every signatures url a vertex."""
+    funnel = Observation()
+    pairs = materialize(
+        "pairs", lambda: candidate_pairs(signatures, cfg, funnel=funnel),
+        funnel)
+    with verified_stage(pairs, signatures, cfg, materialize,
+                        n_signed) as verified:
+        clusters = materialize(
+            "clusters", lambda: assign_clusters(
+                signatures.select("url"),
+                verified.where("keep").select("a", "b")))
+    return pairs, verified, clusters
 
 
 @dataclass
@@ -254,7 +304,7 @@ class DedupPipeline:
                 emit_text=True))
         # the stage's footer row count lets the verify gate collect
         # without a limit; -1 when the stage was resumed
-        sig_rows = self.stage_infos[-1].rows
+        n_signed = self.stage_infos[-1].rows
         extracted = signatures.select("url", "text")
         keys = None
         if build_key_index:
@@ -265,36 +315,8 @@ class DedupPipeline:
                 .repartitionByRange(self.cfg.shuffle_partitions,
                                     "gk_band", "gk_url", "gk_txt")
                 .sortWithinPartitions("gk_band", "gk_url", "gk_txt"))
-        funnel = Observation()
-        pairs = self._run_stage(
-            "pairs",
-            lambda: candidate_pairs(
-                signatures, self.cfg,
-                use_simhash_prefilter=(self.cfg.scoring == "jaccard"),
-                funnel=funnel),
-            funnel)
-        verified_funnel = Observation()
-        sig_broadcast = []
-
-        def build_verified():
-            sig_broadcast.append(broadcast_signatures(signatures, self.cfg,
-                                                      n_rows=sig_rows))
-            return verify_pairs(pairs, signatures, self.cfg,
-                                sig_broadcast=sig_broadcast[0]).observe(
-                verified_funnel, *verified_funnel_columns())
-
-        try:
-            verified = self._run_stage("verified", build_verified,
-                                       verified_funnel)
-        finally:
-            if sig_broadcast and sig_broadcast[0] is not None:
-                sig_broadcast[0].destroy()
-        clusters = self._run_stage(
-            "clusters",
-            lambda: assign_clusters(
-                extracted.select("url"),
-                verified.where("keep").select("a", "b")),
-        )
+        pairs, verified, clusters = dedup_stages(
+            signatures, self.cfg, self._run_stage, n_signed)
         out = {
             "extracted": extracted,
             "signatures": signatures,

@@ -20,8 +20,8 @@ from dedup.cluster import assign_clusters
 from dedup.config import ENGINE_CONFIG, PARITY_CONFIG
 from dedup.lsh import candidate_pairs
 from dedup.normalize import normalize_url_udf, normalize_title_udf
+from dedup.pipeline import dedup_stages, local_checkpoint, verified_stage
 from dedup.signature import signatures_table
-from dedup.verify import verify_pairs
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -762,12 +762,9 @@ def q_metadata_block_pairs(spark, sf_dir):
 def _parity_assignment(spark, sf_dir):
     """Shared parity chain (signatures -> LSH+url pairs -> verify -> CC)
     over the planted-mirror corpus; returns (signatures, assignment)."""
-    c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
-    pairs = candidate_pairs(s, PARITY_CONFIG)
-    verified = verify_pairs(pairs, s, PARITY_CONFIG)
-    return s, assign_clusters(c.select("url"),
-                              verified.where("keep").select("a", "b"))
+    s = signatures_table(docs_as_corpus(spark, sf_dir),
+                         PARITY_CONFIG).localCheckpoint()
+    return s, dedup_stages(s, PARITY_CONFIG, local_checkpoint)[2]
 
 
 def q_dup_clusters(spark, sf_dir):
@@ -1393,12 +1390,9 @@ def q_dup_clusters_engine(spark, sf_dir):
     verification (scoring='jaccard'), connected-components clusters.
     Oracle: VALUES fixture from the single-node engine running the same
     stages (tools/gen_oracle_fixtures.py engine_clusters_expected)."""
-    c = docs_as_corpus(spark, sf_dir)
-    s = signatures_table(c, ENGINE_CONFIG).localCheckpoint()
-    pairs = candidate_pairs(s, ENGINE_CONFIG, use_simhash_prefilter=True)
-    verified = verify_pairs(pairs, s, ENGINE_CONFIG)
-    return assign_clusters(c.select("url"),
-                           verified.where("keep").select("a", "b"))
+    s = signatures_table(docs_as_corpus(spark, sf_dir),
+                         ENGINE_CONFIG).localCheckpoint()
+    return dedup_stages(s, ENGINE_CONFIG, local_checkpoint)[2]
 
 
 def q_config_clamp(spark, sf_dir):
@@ -1426,13 +1420,59 @@ def q_clusters_incremental(spark, sf_dir):
     s = signatures_table(c, PARITY_CONFIG).localCheckpoint()
     # both splits read the verified edges; localCheckpoint materializes the
     # expensive verify DAG once instead of once per split-consumer
-    verified = (verify_pairs(candidate_pairs(s, PARITY_CONFIG), s,
-                             PARITY_CONFIG)
-                .where("keep").select("a", "b").localCheckpoint())
-    first = verified.where(F.xxhash64("a", "b") % 2 == 0)
-    later = verified.where(F.xxhash64("a", "b") % 2 != 0)
+    with verified_stage(candidate_pairs(s, PARITY_CONFIG), s, PARITY_CONFIG,
+                        local_checkpoint) as verified:
+        edges = verified.where("keep").select("a", "b")
+    first = edges.where(F.xxhash64("a", "b") % 2 == 0)
+    later = edges.where(F.xxhash64("a", "b") % 2 != 0)
     base = assign_clusters(c.select("url"), first)
     return merge_assignments(base, later)
+
+
+@contextlib.contextmanager
+def _landed_drops(spark: SparkSession, drops: list[DataFrame], prefix: str):
+    """A temp dir `base` with an empty watched `base/src`, under
+    `_few_shuffle_partitions`; yields (base, landed). Iterating `landed`
+    lands the frames of `drops` in order, each as ONE flat parquet file
+    `src/drop{n}.parquet` (the file source lists files, not
+    subdirectories), and yields n after each. The dir is removed on exit
+    (tempdirs leak across failed driver sweeps otherwise), so a query
+    materializes its result inside the block."""
+    import glob
+    import os
+    import shutil
+    import tempfile
+
+    base = tempfile.mkdtemp(prefix=prefix)
+    os.makedirs(f"{base}/src")
+
+    def landed():
+        for n, df in enumerate(drops):
+            df.coalesce(1).write.parquet(f"{base}/tmp{n}")
+            shutil.copy(glob.glob(f"{base}/tmp{n}/part-*.parquet")[0],
+                        f"{base}/src/drop{n}.parquet")
+            yield n
+
+    try:
+        with _few_shuffle_partitions(spark):
+            yield base, landed()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def _even_odd_drops(spark: SparkSession, sf_dir: str) -> list[DataFrame]:
+    """The planted-mirror corpus below STREAM_QUERY_DOC_BOUND as two
+    ordered (url, text) drops: even doc_ids, then odd doc_ids."""
+    c = docs_as_corpus(spark, sf_dir).where(
+        f"doc_id < {STREAM_QUERY_DOC_BOUND}")
+    return [c.where(pred).select("url", "text")
+            for pred in ("doc_id % 2 = 0", "doc_id % 2 = 1")]
+
+
+def _distinct_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
+    return (spark.read.parquet(out_dir)
+            .select("a", "b", "match_source").distinct()
+            .orderBy("a", "b", "match_source").localCheckpoint())
 
 
 def q_stream_windowed_counts(spark, sf_dir):
@@ -1445,51 +1485,36 @@ def q_stream_windowed_counts(spark, sf_dir):
     = exactly the two finalized windows, late row excluded. Deterministic,
     so the oracle is inline VALUES SQL."""
     import datetime as dt
-    import glob
-    import os
-    import shutil
-    import tempfile
 
     from dedup.streaming import stream_windowed_counts
 
     def ts(h, m=0):
         return dt.datetime(2026, 1, 1, h, m)
 
-    base = tempfile.mkdtemp(prefix="winq_")
-    try:
-        src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-        os.makedirs(src)
-        schema = "url string, warc_ts timestamp, lang string"
-        drops = [
-            [(f"u{i}", ts(9, 5 * i), "en") for i in range(4)]
-            + [("v0", ts(10, 10), "de"), ("w0", ts(12, 0), "en")],
-            [("late", ts(9, 40), "en"), ("x0", ts(12, 30), "en")],
-        ]
-        with _few_shuffle_partitions(spark):
-            for drop_no, rows in enumerate(drops):
-                tmp = f"{base}/tmp{drop_no}"
-                (spark.createDataFrame(rows, schema)
-                 .coalesce(1).write.parquet(tmp))
-                part = glob.glob(f"{tmp}/part-*.parquet")[0]
-                shutil.copy(part, f"{src}/drop{drop_no}.parquet")
-                q = (stream_windowed_counts(
-                    spark.readStream.schema(schema).parquet(src),
-                    watermark="30 minutes", window="1 hour")
-                    .writeStream.format("parquet")
-                    .option("path", out).option("checkpointLocation", ckpt)
-                    .outputMode("append").trigger(availableNow=True).start())
-                q.awaitTermination()
-        return (spark.read.parquet(out)
+    schema = "url string, warc_ts timestamp, lang string"
+    drops = [
+        [(f"u{i}", ts(9, 5 * i), "en") for i in range(4)]
+        + [("v0", ts(10, 10), "de"), ("w0", ts(12, 0), "en")],
+        [("late", ts(9, 40), "en"), ("x0", ts(12, 30), "en")],
+    ]
+    with _landed_drops(spark, [spark.createDataFrame(rows, schema)
+                               for rows in drops], "winq_") as (base, landed):
+        for _ in landed:
+            (stream_windowed_counts(
+                spark.readStream.schema(schema).parquet(f"{base}/src"),
+                watermark="30 minutes", window="1 hour")
+             .writeStream.format("parquet")
+             .option("path", f"{base}/out")
+             .option("checkpointLocation", f"{base}/ckpt")
+             .outputMode("append").trigger(availableNow=True).start()
+             .awaitTermination())
+        return (spark.read.parquet(f"{base}/out")
                 .select(F.date_format("win_start", "yyyy-MM-dd HH:mm:ss")
                         .alias("win_start"),
                         F.date_format("win_end", "yyyy-MM-dd HH:mm:ss")
                         .alias("win_end"),
                         "lang", "n_docs")
                 .orderBy("win_start", "lang").localCheckpoint())
-    finally:
-        # localCheckpoint materialized the result, so the dir (tempdirs
-        # leak across failed driver sweeps otherwise) can go either way
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def q_stream_pairs(spark, sf_dir):
@@ -1500,39 +1525,16 @@ def q_stream_pairs(spark, sf_dir):
     is the DISTINCT (a, b, match_source) set. Oracle: VALUES fixture from
     a single-node replica of the per-bucket state machine processing the
     same two drops in the same order."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from dedup.streaming import run_stream_candidate_pairs
 
-    c = (docs_as_corpus(spark, sf_dir)
-         .where(f"doc_id < {STREAM_QUERY_DOC_BOUND}")
-         .select("url", "text", "doc_id"))
-    base = tempfile.mkdtemp(prefix="streamq_")
-    try:
-        src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-        os.makedirs(src)
-        schema = "url string, text string"
-        with _few_shuffle_partitions(spark):
-            for drop_no, pred in enumerate(("doc_id % 2 = 0",
-                                            "doc_id % 2 = 1")):
-                # land the drop as ONE flat file in the watched dir (the
-                # file source lists files, not subdirectories)
-                tmp = f"{base}/tmp{drop_no}"
-                (c.where(pred).select("url", "text").coalesce(1)
-                 .write.parquet(tmp))
-                part = glob.glob(f"{tmp}/part-*.parquet")[0]
-                shutil.copy(part, f"{src}/drop{drop_no}.parquet")
-                q = run_stream_candidate_pairs(spark, src, ckpt, out,
-                                               PARITY_CONFIG, schema=schema)
-                q.awaitTermination()
-        return (spark.read.parquet(out)
-                .select("a", "b", "match_source").distinct()
-                .orderBy("a", "b", "match_source").localCheckpoint())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _landed_drops(spark, _even_odd_drops(spark, sf_dir),
+                       "streamq_") as (base, landed):
+        for _ in landed:
+            run_stream_candidate_pairs(
+                spark, f"{base}/src", f"{base}/ckpt", f"{base}/out",
+                PARITY_CONFIG, schema="url string, text string",
+            ).awaitTermination()
+        return _distinct_pairs(spark, f"{base}/out")
 
 
 def q_stream_state_evict(spark, sf_dir):
@@ -1544,45 +1546,25 @@ def q_stream_state_evict(spark, sf_dir):
     drops, drop B pairs only within itself — the output must equal the
     union of the two drops run through FRESH single-node replicas (state
     reset models the eviction), with NO cross-drop pairs."""
-    import glob
-    import os
-    import shutil
-    import tempfile
     import time
 
     from dedup.streaming import (evict_expired_pair_state, read_pair_state,
                                  run_stream_candidate_pairs)
 
-    c = (docs_as_corpus(spark, sf_dir)
-         .where(f"doc_id < {STREAM_QUERY_DOC_BOUND}")
-         .select("url", "text", "doc_id"))
-    base = tempfile.mkdtemp(prefix="evictq_")
-    try:
+    with _landed_drops(spark, _even_odd_drops(spark, sf_dir),
+                       "evictq_") as (base, landed):
         src, ckpt, out = f"{base}/src", f"{base}/ckpt", f"{base}/out"
-        os.makedirs(src)
-        schema = "url string, text string"
-        with _few_shuffle_partitions(spark):
-            for drop_no, pred in enumerate(("doc_id % 2 = 0",
-                                            "doc_id % 2 = 1")):
-                tmp = f"{base}/tmp{drop_no}"
-                (c.where(pred).select("url", "text").coalesce(1)
-                 .write.parquet(tmp))
-                part = glob.glob(f"{tmp}/part-*.parquet")[0]
-                shutil.copy(part, f"{src}/drop{drop_no}.parquet")
-                q = run_stream_candidate_pairs(spark, src, ckpt, out,
-                                               PARITY_CONFIG, schema=schema)
-                q.awaitTermination()
-                if drop_no == 0:
-                    # last_seen_ms strictly behind evict time
-                    time.sleep(0.05)
-                    evict_expired_pair_state(spark, src, ckpt,
-                                             state_ttl_ms=0, output_dir=out)
-                    assert read_pair_state(spark, ckpt).count() == 0
-        return (spark.read.parquet(out)
-                .select("a", "b", "match_source").distinct()
-                .orderBy("a", "b", "match_source").localCheckpoint())
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+        for drop_no in landed:
+            run_stream_candidate_pairs(
+                spark, src, ckpt, out, PARITY_CONFIG,
+                schema="url string, text string").awaitTermination()
+            if drop_no == 0:
+                # last_seen_ms strictly behind evict time
+                time.sleep(0.05)
+                evict_expired_pair_state(spark, src, ckpt,
+                                         state_ttl_ms=0, output_dir=out)
+                assert read_pair_state(spark, ckpt).count() == 0
+        return _distinct_pairs(spark, out)
 
 
 def q_ingest_two_drops(spark, sf_dir):
@@ -1594,36 +1576,17 @@ def q_ingest_two_drops(spark, sf_dir):
     merge_assignments fold, singleton top-up. The final assignment must
     equal the batch pipeline's clustering of the union corpus EXACTLY
     (equivalence also pytest-asserted in
-    tests/test_round3_queries.py::test_ingest_drop_incremental_equals_batch),
+    tests/test_streaming.py::test_ingest_drop_incremental_equals_batch),
     so the oracle fixture is the single-node engine's dup_clusters rows."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from dedup.streaming import ingest_drop
 
-    c = (docs_as_corpus(spark, sf_dir)
-         .where(f"doc_id < {STREAM_QUERY_DOC_BOUND}")
-         .select("url", "text", "doc_id"))
-    base = tempfile.mkdtemp(prefix="ingestq_")
-    try:
-        src, wd = f"{base}/src", f"{base}/wd"
-        os.makedirs(src)
-        result = None
-        with _few_shuffle_partitions(spark):
-            for drop_no, pred in enumerate(("doc_id % 2 = 0",
-                                            "doc_id % 2 = 1")):
-                tmp = f"{base}/tmp{drop_no}"
-                (c.where(pred).select("url", "text").coalesce(1)
-                 .write.parquet(tmp))
-                part = glob.glob(f"{tmp}/part-*.parquet")[0]
-                shutil.copy(part, f"{src}/drop{drop_no}.parquet")
-                result = ingest_drop(spark, src, wd, PARITY_CONFIG,
-                                     schema="url string, text string")
-            return result.orderBy("url").localCheckpoint()
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
+    with _landed_drops(spark, _even_odd_drops(spark, sf_dir),
+                       "ingestq_") as (base, landed):
+        for _ in landed:
+            result = ingest_drop(spark, f"{base}/src", f"{base}/wd",
+                                 PARITY_CONFIG,
+                                 schema="url string, text string")
+        return result.orderBy("url").localCheckpoint()
 
 
 def q_pipeline_resume(spark, sf_dir):

@@ -346,9 +346,10 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
        candidate pairs (bucket state persists in `workdir/ckpt_pairs`);
        its foreachBatch sink verifies each micro-batch against the
        accumulated signatures table (reference cosine / engine Jaccard —
-       the same verify_pairs) and merges kept edges into the maintained
-       assignment via cluster.merge_assignments, so only the touched
-       components are re-solved;
+       the pipeline's `verified_stage`, broadcast gate included) and
+       merges kept edges into the maintained assignment via
+       cluster.merge_assignments, so only the touched components are
+       re-solved;
     3. documents never seen in an edge enter as singletons — inside the
        fold, or by a top-up pass when no micro-batch was folded.
 
@@ -363,12 +364,15 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
     exceeds the streaming state cap (hot buckets degrade to the same
     star-edge connectivity the batch path uses). Three parts of a fold are
     still O(corpus): `latest_signatures` windows the whole signatures
-    directory, each fold rewrites the full assignment table, and the pair
-    stream signs the drop a second time (stream_candidate_pairs reads the
-    raw source, not the rows q1 wrote). Storage note: every fold
-    lands the assignment in a FRESH `workdir/assignments_v{n}` dir with a
-    manifest pointer (the table was rewritten wholesale anyway, so the
-    version history is free) — `read_assignments(workdir, version=...)`
+    directory, twice per fold (the verify gate's collect and the new-url
+    anti-join; the broadcast verify plan reads no signatures, the join
+    plan over the gate's bound reads the window twice more), each fold
+    rewrites the full assignment table, and the pair stream signs the
+    drop a second time (stream_candidate_pairs reads the raw source, not
+    the rows q1 wrote). Storage note: every fold lands the assignment in
+    a FRESH `workdir/assignments_v{n}` dir with a manifest pointer (the
+    table was rewritten wholesale anyway, so the version history is
+    free) — `read_assignments(workdir, version=...)`
     gives snapshot as-of reads/rollback across drops; on an Iceberg
     deployment versions map to table snapshots and merge_assignments'
     touched/untouched split to a MERGE INTO that rewrites only the
@@ -376,7 +380,7 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
     from pathlib import Path
 
     from dedup.cluster import merge_assignments
-    from dedup.verify import verify_pairs
+    from dedup.pipeline import verified_stage
 
     sig_dir = f"{workdir}/signatures"
     # null-url rows are state-compaction tombstone files read under the
@@ -399,9 +403,6 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
         .outputMode("append").trigger(availableNow=True).start())
     q1.awaitTermination()
 
-    def latest_sigs():
-        return latest_signatures(spark, sig_dir)
-
     def current_assignments():
         # versioned manifest first; a pre-versioning workdir's flat
         # `assignments` dir reads as the base; None on a fresh workdir
@@ -413,41 +414,47 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
     folded = []
 
     def fold(batch_df, batch_id):
-        sigs = latest_sigs()
+        sigs = latest_signatures(spark, sig_dir)
         # every read of batch_df re-runs the whole stateful pair plan
-        # (signing, key emission, state load and commit). verify_pairs
+        # (signing, key emission, state load and commit). The join plan
         # reads its pairs twice (url_exact and scored branches), so the
         # micro-batch is pinned under the verified edges; one count()
         # materializes every partition of both, and no later action
-        # falls through to the stateful plan
-        pairs = batch_df.persist()
-        verified = (verify_pairs(pairs, sigs, cfg)
-                    .where("keep").select("a", "b").persist())
+        # falls through to the stateful plan. The merge stays inside the
+        # verified stage: tasks over the pinned edges ship their lineage
+        pinned = [batch_df.persist()]
+
+        def pin(stage, build, funnel=None):
+            pinned.append(build().where("keep").select("a", "b").persist())
+            pinned[-1].count()
+            return pinned[-1]
+
         try:
-            verified.count()
-            assignments = current_assignments()
-            if assignments is None:
-                assignments = sigs.select(
-                    "url", F.col("url").alias("cluster_id"))
-            # signed urls with no assignment yet: merge_assignments
-            # clusters the ones an edge touches, the rest enter as
-            # singletons — kept out of the merge so its driver steps never
-            # read the signatures window
-            edge_urls = (verified.select(F.col("a").alias("url"))
-                         .unionByName(verified.select(F.col("b")
-                                                      .alias("url"))))
-            new_urls = (sigs.select("url")
-                        .join(assignments.select("url"), "url", "left_anti")
-                        .join(edge_urls, "url", "left_anti")
-                        .select("url", F.col("url").alias("cluster_id")))
-            merged = (merge_assignments(assignments, verified)
-                      .unionByName(new_urls))
-            # fresh versioned dir: no read-overwrite hazard, and the
-            # version history gives Iceberg-snapshot-style as-of reads
-            _write_assignment_version(merged, workdir)
+            with verified_stage(pinned[0], sigs, cfg, pin) as verified:
+                assignments = current_assignments()
+                if assignments is None:
+                    assignments = sigs.select(
+                        "url", F.col("url").alias("cluster_id"))
+                # signed urls with no assignment yet: merge_assignments
+                # clusters the ones an edge touches, the rest enter as
+                # singletons — kept out of the merge so its driver steps
+                # never read the signatures window
+                edge_urls = (verified.select(F.col("a").alias("url"))
+                             .unionByName(verified.select(
+                                 F.col("b").alias("url"))))
+                new_urls = (sigs.select("url")
+                            .join(assignments.select("url"), "url",
+                                  "left_anti")
+                            .join(edge_urls, "url", "left_anti")
+                            .select("url", F.col("url").alias("cluster_id")))
+                merged = (merge_assignments(assignments, verified)
+                          .unionByName(new_urls))
+                # fresh versioned dir: no read-overwrite hazard, and the
+                # version history gives Iceberg-snapshot-style as-of reads
+                _write_assignment_version(merged, workdir)
         finally:
-            verified.unpersist()
-            pairs.unpersist()
+            for df in pinned:
+                df.unpersist()
         folded.append(batch_id)
 
     src = spark.readStream.schema(schema).parquet(source_dir)
@@ -464,7 +471,7 @@ def ingest_drop(spark, source_dir: str, workdir: str, cfg: DedupConfig,
 
     # a drop whose documents hit no blocking bucket emits no micro-batch
     # at all — enter those documents as singletons
-    sigs = latest_sigs()
+    sigs = latest_signatures(spark, sig_dir)
     assignments = current_assignments()
     if assignments is not None:
         missing = (sigs.select("url")

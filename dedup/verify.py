@@ -25,7 +25,9 @@ Scale notes:
   boundary, not its two signature arrays. The gate's row bound is
   spark.sql.autoBroadcastJoinThreshold // (8 * num_hashes) — the bytes of
   the matrix under the planner's own broadcast budget; above it, with
-  duplicate signed urls, or in engine mode the join plan runs.
+  duplicate signed urls, or in engine mode the join plan runs. Every
+  caller reaches both through `pipeline.verified_stage`, which runs the
+  gate, owns the broadcast and destroys it after the caller's last read.
 - engine (jaccard) mode is two-phase: a NATIVE MinHash-estimate prefilter
   over the already-joined signature vectors rejects most non-duplicate
   pairs before the 10-100x wider shingle arrays are joined at all.
@@ -159,7 +161,8 @@ def broadcast_signatures(signatures: DataFrame, cfg: DedupConfig,
       single-partition exchange;
     - a signed url repeats: the join emits one row per matching signature
       row, which a url -> row index cannot reproduce.
-    The caller owns the broadcast and destroy()s it after its write. A
+    The caller (`pipeline.verified_stage`) owns the broadcast and
+    destroy()s it after its last read of the verified frame. A
     pd.Index builds its hash table on its first lookup and keeps it, and a
     worker keeps a broadcast value across tasks, so each worker builds the
     url index once."""
@@ -247,9 +250,8 @@ def verify_pairs(pairs: DataFrame, signatures: DataFrame, cfg: DedupConfig,
       stays in SQL. asNondeterministic stops CollapseProject from inlining
       the UDF once per referencing expression (keep + similarity) and stops
       filter pushdown from re-evaluating it below `where(keep)`, so the
-      plan holds exactly one ArrowEvalPython. This is the plan for every
-      caller that does not run the gate (the streaming fold, the driver
-      queries, engine mode).
+      plan holds exactly one ArrowEvalPython. It runs where the gate
+      declines: over its row bound, or with a repeated signed url.
 
     Engine (jaccard) mode adds a native prefilter BEFORE the shingle join:
     the MinHash Jaccard estimate (equal-component count over the two

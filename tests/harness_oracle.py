@@ -1,8 +1,10 @@
 """Dev harness approximating the driver's correctness check: run each
 queries() entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare
 row count, column names, and order-insensitive values. Not a pytest module
-(invoked directly); tests/test_queries.py runs the same comparison under
-pytest for a fast subset."""
+(invoked directly, `python tests/harness_oracle.py [name ...]`); pytest
+runs the same comparison for a subset: the dedup-chain queries at sf0.01
+(tests/test_dedup_stages.py) and the inline-SQL oracles at sf0.001
+(tests/test_round3_queries.py)."""
 
 from __future__ import annotations
 

@@ -154,6 +154,21 @@ class TestMergeAssignments:
         oracle = union_find(initial + new, verts)
         assert got == set(oracle.items())
 
+    def test_clusters_incremental_merges_two_clusters(self, spark):
+        """A later edge bridging two existing clusters merges them under the
+        min member id, and untouched clusters pass through unchanged."""
+        from dedup.cluster import assign_clusters, merge_assignments
+
+        urls = spark.createDataFrame([(u,) for u in "abcdefg"], "url string")
+        first = spark.createDataFrame([("a", "b"), ("c", "d"), ("e", "f")],
+                                      "a string, b string")
+        base = assign_clusters(urls, first)
+        bridge = spark.createDataFrame([("b", "c")], "a string, b string")
+        merged = {r["url"]: r["cluster_id"]
+                  for r in merge_assignments(base, bridge).collect()}
+        assert merged == {"a": "a", "b": "a", "c": "a", "d": "a",
+                          "e": "e", "f": "e", "g": "g"}
+
 
 def test_merge_assignments_size_gate_fallback(spark):
     """A drop touching more clusters than the broadcast threshold must

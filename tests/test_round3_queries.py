@@ -1,6 +1,6 @@
-"""Round-3 coverage queries: incremental clustering, semantic dedup,
-streaming pairs as a driver row, checkpoint-resume as a driver row, M3/M5
-response-layer parity, engine-config signatures, T4 coefficients.
+"""Round-3 coverage queries: semantic dedup, streaming pairs as a driver
+row, checkpoint-resume as a driver row, M3/M5 response-layer parity,
+engine-config signatures, T4 coefficients.
 
 All at sf0.001 for speed; the sf0.01 driver-gate equivalents are frozen by
 tools/gen_oracle_fixtures.py --check.
@@ -12,34 +12,6 @@ import duckdb
 import pytest
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_clusters_incremental_equals_batch(spark):
-    """merge_assignments over a split edge set must equal the full batch
-    recompute exactly (url -> cluster_id, component-minimum ids)."""
-    from dedup.queries import q_clusters_incremental, q_dup_clusters
-
-    batch = {(r["url"], r["cluster_id"])
-             for r in q_dup_clusters(spark, SF).collect()}
-    incr = {(r["url"], r["cluster_id"])
-            for r in q_clusters_incremental(spark, SF).collect()}
-    assert incr == batch
-
-
-def test_clusters_incremental_merges_two_clusters(spark):
-    """A later edge bridging two existing clusters merges them under the
-    min member id, and untouched clusters pass through unchanged."""
-    from dedup.cluster import assign_clusters, merge_assignments
-
-    urls = spark.createDataFrame([(u,) for u in "abcdefg"], "url string")
-    first = spark.createDataFrame([("a", "b"), ("c", "d"), ("e", "f")],
-                                  "a string, b string")
-    base = assign_clusters(urls, first)
-    bridge = spark.createDataFrame([("b", "c")], "a string, b string")
-    merged = {r["url"]: r["cluster_id"]
-              for r in merge_assignments(base, bridge).collect()}
-    assert merged == {"a": "a", "b": "a", "c": "a", "d": "a",
-                      "e": "e", "f": "e", "g": "g"}
 
 
 def test_semantic_dedup_matches_local_replica(spark):
@@ -129,24 +101,6 @@ def test_candidate_stats_reference_semantics(spark):
     # the source doc itself is in the pool -> field max similarity is 1.0
     assert t["max_similarity"] == 1.0
     assert rows["url"]["max_similarity"] is None
-
-
-def test_dup_clusters_engine_mirrors_cluster_together(spark):
-    """Engine-mode e2e (char shingles + SimHash prefilter + exact Jaccard):
-    every planted mirror must land in its original's cluster, and the
-    cluster id is the component minimum url."""
-    from dedup.queries import q_dup_clusters_engine
-
-    assign = {r["url"]: r["cluster_id"]
-              for r in q_dup_clusters_engine(spark, SF).collect()}
-    for url, cid in assign.items():
-        if url.startswith("https://mirror.net/copy/"):
-            doc_id = url.rsplit("/", 1)[1]
-            twins = [u for u in assign
-                     if u.endswith(f"/docs/{doc_id}")
-                     and assign[u] == cid]
-            assert twins, f"mirror {url} not clustered with its original"
-        assert cid <= url  # component-minimum id
 
 
 def test_minhash_signatures_engine_matches_local(spark):

@@ -1,6 +1,6 @@
 """Round-4 coverage: fully-vectorized engine Jaccard verify (flattened
 searchsorted + native MinHash-estimate prefilter), trained IVF quantizer
-(artifact + recall), --scoring CLI flag, incremental-ingest driver row."""
+(artifact + recall), --scoring CLI flag."""
 
 from __future__ import annotations
 
@@ -246,31 +246,3 @@ def test_repetition_filter_matches_duckdb(spark):
     want = _duck(SF, ORACLE_SQL["repetition_filter"])
     assert got == [tuple(w) for w in want]
     assert got  # integer-only decision: exact cross-engine equality
-
-
-# --- driver row: ingest_two_drops -------------------------------------------
-
-def test_ingest_two_drops_query_equals_batch(spark):
-    """The incremental two-drop ingest lands at the BATCH pipeline's
-    clustering of the same (subset) corpus — computed here by running the
-    batch operators over the identical subset input."""
-    from dedup.cluster import assign_clusters
-    from dedup.config import PARITY_CONFIG
-    from dedup.lsh import candidate_pairs
-    from dedup.queries import (STREAM_QUERY_DOC_BOUND, docs_as_corpus,
-                               q_ingest_two_drops)
-    from dedup.signature import signatures_table
-    from dedup.verify import verify_pairs
-
-    got = {(r["url"], r["cluster_id"])
-           for r in q_ingest_two_drops(spark, SF).collect()}
-    c = (docs_as_corpus(spark, SF)
-         .where(f"doc_id < {STREAM_QUERY_DOC_BOUND}")
-         .select("url", "text"))
-    sigs = signatures_table(c, PARITY_CONFIG).localCheckpoint()
-    pairs = candidate_pairs(sigs, PARITY_CONFIG)
-    keep = verify_pairs(pairs, sigs, PARITY_CONFIG).where("keep")
-    want = {(r["url"], r["cluster_id"])
-            for r in assign_clusters(c.select("url"),
-                                     keep.select("a", "b")).collect()}
-    assert got == want

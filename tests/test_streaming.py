@@ -4,11 +4,27 @@ calls), the latest_signatures read and the assignment manifest."""
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import shutil
 import time
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
+THRESHOLD_KEY = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value):
+    """Set autoBroadcastJoinThreshold to `value` (None keeps the session's)
+    and restore it on exit."""
+    saved = spark.conf.get(THRESHOLD_KEY)
+    spark.conf.set(THRESHOLD_KEY, value or saved)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD_KEY, saved)
 
 
 def _land_drop(df, tmp_path, src, name):
@@ -19,11 +35,15 @@ def _land_drop(df, tmp_path, src, name):
                 str(src / f"{name}.parquet"))
 
 
-def test_ingest_drop_incremental_equals_batch(spark, tmp_path):
+@pytest.mark.parametrize("threshold", [None, "800"],
+                         ids=["broadcast", "join"])
+def test_ingest_drop_incremental_equals_batch(spark, tmp_path, threshold):
     """Two crawl drops through streaming.ingest_drop (signatures append ->
     stateful pairs -> verify -> merge_assignments) must end at EXACTLY the
     batch pipeline's clustering of the union corpus — cross-drop dups only
-    co-cluster if bucket state and the incremental merge both work."""
+    co-cluster if bucket state and the incremental merge both work. Under
+    an autoBroadcastJoinThreshold of one matrix row (800 bytes) the folds
+    verify through the join plan instead of the broadcast."""
     import glob
     import shutil
 
@@ -43,10 +63,11 @@ def test_ingest_drop_incremental_equals_batch(spark, tmp_path):
         shutil.copy(part, f"{src}/drop{drop_no}.parquet")
         # collect eagerly: the returned frame is a live view of the
         # assignments dir, which the next drop overwrites
-        results.append({(r["url"], r["cluster_id"])
-                        for r in ingest_drop(
-                            spark, src, wd, PARITY_CONFIG,
-                            schema="url string, text string").collect()})
+        with _broadcast_threshold(spark, threshold):
+            results.append({(r["url"], r["cluster_id"])
+                            for r in ingest_drop(
+                                spark, src, wd, PARITY_CONFIG,
+                                schema="url string, text string").collect()})
 
     want = {(r["url"], r["cluster_id"])
             for r in q_dup_clusters(spark, SF).collect()}
@@ -321,6 +342,91 @@ def test_fold_runs_the_stateful_pair_plan_once(spark, tmp_path):
         spark.streams.removeListener(listener)
     assert keys > 0
     assert sum(listener.updated) == keys
+
+
+def _plan_nodes(plan):
+    """Operator names of a physical plan, the final plan under AQE; a
+    cached frame is one InMemoryTableScan leaf (its plan is not walked)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return _plan_nodes(plan.executedPlan())
+    kids = plan.children()
+    return [plan.nodeName(), *(n for i in range(kids.size())
+                               for n in _plan_nodes(kids.apply(i)))]
+
+
+def _land_sf_drop(spark, tmp_path):
+    from dedup.queries import docs_as_corpus
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _land_drop(docs_as_corpus(spark, SF).where("doc_id < 30")
+               .select("url", "text"), tmp_path, src, "drop0")
+    return str(src)
+
+
+def test_fold_verifies_through_the_broadcast(spark, tmp_path, monkeypatch):
+    """Under the default threshold each fold scores its pinned micro-batch
+    in one MapInArrow: no ArrowEvalPython, no join, and no
+    latest_signatures Window (the gate's collect reads the window)."""
+    import dedup.pipeline as pipeline
+    from dedup.config import PARITY_CONFIG
+    from dedup.streaming import ingest_drop
+
+    plans = []
+    verify_pairs = pipeline.verify_pairs
+
+    def recording(*args, **kwargs):
+        df = verify_pairs(*args, **kwargs)
+        plans.append(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+        return df
+
+    monkeypatch.setattr(pipeline, "verify_pairs", recording)
+    ingest_drop(spark, _land_sf_drop(spark, tmp_path),
+                str(tmp_path / "wd"), PARITY_CONFIG,
+                schema="url string, text string")
+    assert plans
+    for nodes in plans:
+        assert nodes.count("MapInArrow") == 1, nodes
+        assert "InMemoryTableScan" in nodes, nodes
+        assert "ArrowEvalPython" not in nodes
+        assert not any("Join" in n for n in nodes), nodes
+        assert "Window" not in nodes
+
+
+def test_fold_merges_while_the_broadcast_lives(spark, tmp_path,
+                                               monkeypatch):
+    """The fold merges inside the verified stage: tasks over the pinned
+    edges ship their lineage, broadcast included, and an evicted edge
+    partition recomputes through the broadcast verify plan, so the
+    broadcast must outlive the merge. The edges are unpersisted as the
+    merge starts (an eviction); the fold's result still equals the batch
+    clustering of the drop."""
+    import dedup.cluster as cluster
+    from dedup.config import PARITY_CONFIG
+    from dedup.pipeline import dedup_stages, local_checkpoint
+    from dedup.queries import docs_as_corpus
+    from dedup.signature import signatures_table
+    from dedup.streaming import ingest_drop
+
+    merge_assignments = cluster.merge_assignments
+    evicted = []
+
+    def evicting(assignments, new_edges, *args, **kwargs):
+        new_edges.unpersist(blocking=True)
+        evicted.append(new_edges.count())
+        return merge_assignments(assignments, new_edges, *args, **kwargs)
+
+    monkeypatch.setattr(cluster, "merge_assignments", evicting)
+    got = {tuple(r) for r in ingest_drop(
+        spark, _land_sf_drop(spark, tmp_path), str(tmp_path / "wd"),
+        PARITY_CONFIG, schema="url string, text string").collect()}
+    assert evicted and evicted[0] > 0
+    sigs = signatures_table(
+        docs_as_corpus(spark, SF).where("doc_id < 30").select("url", "text"),
+        PARITY_CONFIG).localCheckpoint()
+    want = {tuple(r) for r in dedup_stages(sigs, PARITY_CONFIG,
+                                           local_checkpoint)[2].collect()}
+    assert got == want
 
 
 def test_idle_ingest_drop_changes_nothing(spark, tmp_path):

@@ -109,7 +109,6 @@ def test_engine_verify_matches_oracle_including_prefilter(spark):
     NULL-scored prefilter-rejected rows."""
     from dedup import local_oracle as lo
     from dedup.config import ENGINE_CONFIG
-    from dedup.lsh import candidate_pairs
     from dedup.signature import signatures_table
     from dedup.verify import verify_pairs
 
@@ -133,14 +132,17 @@ def test_engine_verify_matches_oracle_including_prefilter(spark):
     corpus = spark.createDataFrame(
         rows, "url string, text string, title string")
     sigs = signatures_table(corpus, ENGINE_CONFIG)
-    pairs = candidate_pairs(sigs, ENGINE_CONFIG)
+    oc = [(u, t, None, ti, None) for u, t, ti in rows]
+    osigs = lo.local_signatures(oc, ENGINE_CONFIG)
+    # the oracle's pairs skip candidate_pairs' engine-mode SimHash gate,
+    # so the title pair reaches verify's MinHash prefilter
+    opairs = lo.local_candidate_pairs(osigs, ENGINE_CONFIG)
+    pairs = spark.createDataFrame(
+        opairs, "a string, b string, match_source string")
     got = {(r["a"], r["b"], r["match_source"]):
            (r["similarity"], r["jaccard"], r["keep"])
            for r in verify_pairs(pairs, sigs, ENGINE_CONFIG).collect()}
 
-    oc = [(u, t, None, ti, None) for u, t, ti in rows]
-    osigs = lo.local_signatures(oc, ENGINE_CONFIG)
-    opairs = lo.local_candidate_pairs(osigs, ENGINE_CONFIG)
     want = {(a, b, src): (sim, jac, keep)
             for a, b, src, sim, jac, keep in lo.local_verify(
                 opairs, osigs, ENGINE_CONFIG)}
