@@ -15,13 +15,13 @@ Scale design (the part that must survive 100 TB):
   joins them back by key).
 - band_hash is a native xxhash64 over the array slice: whole-stage codegen,
   no Python.
-- pair emission is ONE groupBy collect_set per key with NATIVE in-group
-  expansion (no self-join): all pairs for groups <= cap via a codegen
-  transform/flatten; star edges around the group-min member for hot
-  (boilerplate) groups — O(n) edges, cluster connectivity preserved; a pair
-  missed inside one hot band has b-1 other bands plus the norm_url group.
-  Hot keys come from a count pre-pass whose above-cap result is tiny and
-  broadcast; building the plan runs no Spark job.
+- pair emission is ONE hash exchange of the key rows by key, then windows
+  over that partitioning and NATIVE in-partition expansion (no self-join,
+  no join, no broadcast): all pairs for groups <= cap; star edges around
+  the group-min member for hot (boilerplate) groups — O(n) edges, cluster
+  connectivity preserved; a pair missed inside one hot band has b-1 other
+  bands plus the norm_url group. The signatures are scanned once and
+  building the plan runs no Spark job.
 - `a < b` canonicalization + one dedup pass before verification mirrors the
   reference's seen-id dedup (app/hash_detector.py:290-293) and keeps the
   expensive scoring stage minimal (SURVEY §4 "dedup before scoring").
@@ -29,40 +29,9 @@ Scale design (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 from dedup.config import DedupConfig
-
-# all-pairs expansion over the sorted members of one group: (i, j) with i < j
-_PAIR_EXPANSION = (
-    "flatten(transform(us, (x, i) -> "
-    "transform(slice(us, i + 2, size(us) - i - 1), y -> struct(x as a, y as b))))"
-)
-# payload variant: members are structs (url, _pl); pairs carry both payloads
-_PAIR_EXPANSION_PAYLOAD = (
-    "flatten(transform(us, (x, i) -> "
-    "transform(slice(us, i + 2, size(us) - i - 1), "
-    "y -> struct(x.url as a, y.url as b, x._pl as pa, y._pl as pb))))"
-)
-
-
-def _join_on_keys(big: DataFrame, small: DataFrame, key_cols: list[str],
-                  how: str, broadcast: bool = True) -> DataFrame:
-    """Join `small` onto `big` by key_cols with NULL-SAFE equality
-    (a USING join never matches null keys; the unified key table carries
-    exactly-one-of (gk_band, gk_url), so every row has a null key column).
-    `broadcast=True` hints the small side (hot-key tables are tiny by
-    construction); `broadcast=False` leaves the strategy to the planner +
-    AQE for sides whose size is corpus-dependent."""
-    sm = small.select(*[F.col(k).alias(f"__k_{k}") for k in key_cols],
-                      *[c for c in small.columns if c not in key_cols])
-    cond = None
-    for k in key_cols:
-        c = F.col(k).eqNullSafe(F.col(f"__k_{k}"))
-        cond = c if cond is None else cond & c
-    right = F.broadcast(sm) if broadcast else sm
-    return big.join(right, cond, how).drop(
-        *[f"__k_{k}" for k in key_cols])
 
 
 def pairs_within_groups(members: DataFrame, key_cols: list[str],
@@ -72,97 +41,84 @@ def pairs_within_groups(members: DataFrame, key_cols: list[str],
                         funnel: Observation | None = None) -> DataFrame:
     """(key..., member) -> (a, b) pairs within each key group, skew-aware.
 
-    Groups with <= cap members emit all pairs via native expansion; hot
-    groups emit star edges around their min member (connectivity-
-    preserving). Output is NOT deduplicated across keys. With `keep_keys`,
-    the key columns ride along on every pair (callers aggregate them to
-    label pair provenance). Null key values form their own groups (null-safe
-    joins throughout).
+    Groups with <= cap member rows emit all pairs (a < b) of their
+    distinct members; hot groups emit a star edge from their min member
+    to every row of another member (connectivity-preserving). Output is
+    NOT deduplicated across keys: a pair appears once per key that emits
+    it. With `keep_keys`, the key columns ride along on every pair
+    (callers aggregate them to label pair provenance). Null key values
+    form their own groups.
 
-    A pure plan: building it runs no Spark job and nothing is materialized.
-    The hot subplan is always planned; when no key is hot its broadcast
-    side is empty and AQE prunes the branch at run time. With `funnel`,
-    the per-key count aggregate is observed by that Observation, which
-    fills on the first action over the result with the key funnel `keys`
-    (distinct keys), `singleton` (n == 1), `cold` (1 < n <= cap) and `hot`
-    (n > cap, the capped-bucket count), n being a key's row count. When
-    the result is empty AQE may prune every branch that reads the
-    aggregate, and the Observation then holds no metrics.
+    Plan: ONE hash exchange of the member rows by key, then one pass that
+    emits the pairs inside each partition. A window over the key sorted by
+    member gives each row its key's row count n, min member c, row number
+    and previous member; singleton rows (n == 1, the vast majority) are
+    dropped right after it. A second window over the same partitioning
+    collects a cold key's sorted member set (a hot key's is empty), and
+    each row explodes its own pairs: a cold row pairs with every larger
+    member, once per distinct (key, member); a hot row whose member is
+    not c emits the star edge (c, member). There is no count pre-pass, no join
+    and no broadcast, so the signatures are scanned once. A pure plan:
+    building it runs no Spark job.
+
+    Trade: all of a hot key's rows pass through one task's sort and
+    window buffer, with no map-side combine. On a hot-heavy synth corpus
+    (20,000 docs, 50 hot keys) that was still faster than the count
+    pre-pass plan (BENCH/BASELINE.md).
+
+    With `funnel`, the windowed rows are observed before the singleton
+    filter: `keys` (distinct keys), `singleton` (n == 1), `cold`
+    (1 < n <= cap) and `hot` (n > cap, the capped-bucket count), read from
+    each key's first row. It fills on the first action over the result,
+    also when no pair is emitted. A caller that shuffles the result again
+    (candidate_pairs' labeling aggregate) loses it when no pair reaches
+    that shuffle: AQE then replaces the stage that holds the observation
+    by an empty relation.
 
     With `payload_col`, each member carries one scalar payload through the
     expansion and every emitted pair exposes both sides as (pa, pb) — this
     lets callers apply pair-level prefilters (e.g. the engine's SimHash
-    Hamming gate) INSIDE the same codegen stage, before the raw pair rows
-    ever reach a shuffle/aggregation. Member ordering and dedup semantics
-    are unchanged: a url maps to exactly one payload, so sorting/distinct
-    over (url, payload) structs equals sorting/distinct over urls.
-
-    Shuffle budget (r6 restructure — see OPTIMIZATION_r06.md): ONE slim
-    count aggregation over (key, partial-count) pairs after map-side
-    combine classifies every key as singleton (n == 1, the vast majority
-    — they can never emit a pair), cold-multi (1 < n <= cap) or hot
-    (n > cap). Only rows of COLD-MULTI keys reach the expensive
-    collect_set aggregation — previously every singleton key built a
-    one-element set through the ObjectHashAggregate, which profiling
-    showed was the dominant p2 cost (guide §2.3 "aggregate before you
-    shuffle" / don't compute things you throw away). The eligible-key
-    join is deliberately un-hinted: AQE broadcasts the eligible side at
-    bench scale and falls back to a shuffle join when the multi-key set
-    is corpus-sized; hot-key joins stay explicitly broadcast (tiny by
-    construction)."""
-    cols = [*key_cols, F.col(member_col).alias("url")]
+    Hamming gate) in the same stage, before the raw pair rows reach a
+    shuffle. Member ordering and dedup semantics are unchanged: a url maps
+    to exactly one payload, so ordering (url, payload) structs equals
+    ordering urls."""
+    member = F.col(member_col)
     if payload_col is not None:
-        cols.append(F.col(payload_col).alias("_pl"))
-    m = members.select(*cols)
-    counts = m.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+        member = F.struct(member.alias("url"),
+                          F.col(payload_col).alias("_pl"))
+    by_key = Window.partitionBy(*key_cols).orderBy("x")
+    whole = by_key.rowsBetween(Window.unboundedPreceding,
+                               Window.unboundedFollowing)
+    x, n = F.col("x"), F.col("n")
+    w = members.select(*key_cols, member.alias("x")).select(
+        *key_cols, "x", F.count(F.lit(1)).over(whole).alias("n"),
+        F.min(x).over(whole).alias("c"),
+        F.row_number().over(by_key).alias("rn"),
+        F.lag(x).over(by_key).alias("prev"))
     if funnel is not None:
-        n = F.col("n")
-        counts = counts.observe(
-            funnel, F.count(F.lit(1)).alias("keys"),
-            F.count_if(n == 1).alias("singleton"),
-            F.count_if((n > 1) & (n <= cap)).alias("cold"),
-            F.count_if(n > cap).alias("hot"))
-    hot_keys = (counts.where(F.col("n") > cap).drop("n")
-                .withColumn("_hot", F.lit(True)))
-    # keys that can emit cold all-pairs: more than one member row, not hot
-    eligible = counts.where((F.col("n") > 1) & (F.col("n") <= cap)).drop("n")
+        first = F.col("rn") == 1
+        w = w.observe(
+            funnel, F.count_if(first).alias("keys"),
+            F.count_if(first & (n == 1)).alias("singleton"),
+            F.count_if(first & (n > 1) & (n <= cap)).alias("cold"),
+            F.count_if(first & (n > cap)).alias("hot"))
 
-    member_expr = (F.struct("url", "_pl") if payload_col is not None
-                   else F.col("url"))
-    expansion = (_PAIR_EXPANSION_PAYLOAD if payload_col is not None
-                 else _PAIR_EXPANSION)
-    pair_cols = (["p.a", "p.b", "p.pa", "p.pb"]
-                 if payload_col is not None else ["p.a", "p.b"])
-    cold_src = _join_on_keys(m, eligible, key_cols, "inner", broadcast=False)
-    cold_groups = (cold_src
-                   .groupBy(*key_cols)
-                   .agg(F.sort_array(F.collect_set(member_expr)).alias("us"))
-                   .where(F.size("us") > 1))
-    cold_pairs = (cold_groups
-                  .select(*key_cols,
-                          F.explode(F.expr(expansion)).alias("p"))
-                  .select(*key_cols, *pair_cols))
+    def pair(a, b):
+        if payload_col is None:
+            return F.struct(a.alias("a"), b.alias("b"))
+        return F.struct(a["url"].alias("a"), b["url"].alias("b"),
+                        a["_pl"].alias("pa"), b["_pl"].alias("pb"))
 
-    hot = _join_on_keys(m, hot_keys, key_cols, "inner").drop("_hot")
-    if payload_col is not None:
-        # min over (url, payload) structs == min url (payload is a pure
-        # function of the url)
-        hot_centers = (hot.groupBy(*key_cols)
-                       .agg(F.min(F.struct("url", "_pl")).alias("_c"))
-                       .select(*key_cols, F.col("_c.url").alias("a"),
-                               F.col("_c._pl").alias("pa")))
-        hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
-                     .where(F.col("url") != F.col("a"))
-                     .select(*key_cols, "a", F.col("url").alias("b"),
-                             "pa", F.col("_pl").alias("pb")))
-    else:
-        hot_centers = hot.groupBy(*key_cols).agg(F.min("url").alias("a"))
-        hot_pairs = (_join_on_keys(hot, hot_centers, key_cols, "inner")
-                     .where(F.col("url") != F.col("a"))
-                     .select(*key_cols, "a", F.col("url").alias("b")))
-    keep = ([*key_cols] if keep_keys else []) + ["a", "b"] + \
-        (["pa", "pb"] if payload_col is not None else [])
-    return cold_pairs.unionByName(hot_pairs).select(*keep)
+    emit = (F.when(n <= cap, F.when(
+        ~x.eqNullSafe(F.col("prev")),
+        F.transform(F.filter("us", lambda y: y > x), lambda y: pair(x, y))))
+        .when(x != F.col("c"), F.array(pair(F.col("c"), x))))
+    kept = key_cols if keep_keys else []
+    return (w.where(n > 1)
+            .withColumn("us", F.sort_array(F.collect_set(
+                F.when(n <= cap, x)).over(whole)))
+            .select(*kept, F.explode(emit).alias("p"))
+            .select(*kept, "p.*"))
 
 
 GROUP_KEY_COLS = ["gk_band", "gk_url", "gk_txt"]
@@ -262,15 +218,17 @@ def candidate_pairs(signatures: DataFrame,
                     cfg: DedupConfig,
                     funnel: Observation | None = None) -> DataFrame:
     """Full candidate set: LSH ∪ url_exact in ONE key-emission pass — one
-    signatures scan, one grouped pair-expansion shuffle, one labeling
-    aggregation (instead of separate band and url subplans + a dedup
-    window). A pair seen under any URL key is url_exact and wins: it scores
-    1.0 regardless of text, like the reference's short-circuit at
+    signatures scan, one key exchange with in-partition pair expansion
+    (pairs_within_groups), one labeling aggregation: two shuffles, no join
+    (instead of separate band and url subplans + a dedup window). A pair
+    seen under any URL key is url_exact and wins: it scores 1.0 regardless
+    of text, like the reference's short-circuit at
     app/hash_detector.py:263-266.
 
     A pure plan, like pairs_within_groups; `funnel` is handed to it and
     observes the key funnel (keys -> singleton / cold / hot) on the first
-    action over the result."""
+    action over the result, unless no pair reaches the labeling shuffle
+    (see pairs_within_groups)."""
     # Engine mode (cfg.scoring "jaccard"): SimHash rides the key emission
     # as a member payload so the Hamming gate runs INSIDE the
     # pair-expansion codegen stage — the raw pair rows a boilerplate-heavy

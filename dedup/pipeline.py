@@ -13,7 +13,8 @@ A stage whose manifest matches the current job key is SKIPPED on resume and
 its table is read back — resume-from-failure therefore costs only the stages
 after the last completed checkpoint. Lineage lives in
 `workdir/_lineage/<stage>.json`; per-part row counts and wall times go to
-the `metrics` table (`workdir/metrics/`). Two manifests carry a funnel:
+the `metrics` table (`workdir/metrics/`). Three manifests carry a funnel:
+- signatures: docs -> signed (minhash not null);
 - pairs: keys -> singleton / cold / hot;
 - verified: pairs, one count per match_source, scored (similarity not
   null) and kept.
@@ -23,7 +24,8 @@ counts come from the footers of the part files the stage write produced,
 one metrics row per written file; the metrics rows are one Arrow table
 written from the driver; the stage table is read back with the schema of
 the frame that was written; each funnel is an Observation that fills
-during its stage's write (the verified one on the written frame itself).
+during its stage's write (the signatures and verified ones on the written
+frame itself, the pairs one right above the key exchange).
 Every job a stage runs carries the job tag `dedup-stage:<stage>`.
 
 One builder, `dedup_stages`, composes signatures -> pairs -> verified ->
@@ -231,11 +233,12 @@ class DedupPipeline:
                    funnel: Observation | None = None) -> DataFrame:
         """Build and write one stage, or read it back when a resumable
         checkpoint exists. `funnel` is the Observation the built frame
-        carries (the pairs stage's key funnel): it fills during the stage
-        write, and is recorded in the manifest, with its `hot` count as
+        carries: it fills during the stage write, and is recorded in the
+        manifest, with its `hot` count (the pairs stage's key funnel) as
         the metrics rows' n_capped_buckets. It is not read when the stage
-        wrote no row: AQE then may have pruned the observed subplan, and
-        the Observation holds no metrics."""
+        wrote no row: when no pair reaches candidate_pairs' labeling
+        shuffle, AQE replaces the stage that holds the key funnel by an
+        empty relation, and the Observation holds no metrics."""
         from dedup.metrics import rest_stage_metrics, stage_ids, task_totals
 
         ref = self._stage_ref(stage)
@@ -296,12 +299,16 @@ class DedupPipeline:
         candidates' signatures rows (a join by url), instead of ranking
         every signatures row against the source's keys in one scan."""
         has_html = "html" in corpus.columns
+        sig_funnel = Observation()
         signatures = self._run_stage(
             "signatures",
             lambda: signatures_table(
                 corpus, self.cfg,
                 extract_html_col="html" if has_html else None,
-                emit_text=True))
+                emit_text=True).observe(
+                sig_funnel, F.count(F.lit(1)).alias("docs"),
+                F.count("minhash").alias("signed")),
+            sig_funnel)
         # the stage's footer row count lets the verify gate collect
         # without a limit; -1 when the stage was resumed
         n_signed = self.stage_infos[-1].rows

@@ -159,6 +159,34 @@ def test_engine_mode_pipeline_tracks_capped_buckets(spark, tmp_path):
     assert tables["clusters"].count() > 0
 
 
+def test_all_singleton_pass_records_the_signed_funnel(spark, tmp_path):
+    """A pass whose blocking keys all have one row writes no pair and
+    completes: docs -> signed equals the persisted signatures table's
+    counts (a blank page is not signed), and every url is its own
+    cluster. The key funnel's stage is pruned by AQE when no pair reaches
+    the labeling shuffle, so an empty pairs stage records no funnel."""
+    import json
+
+    rows = [(f"https://s{i}.example.org/p", " ".join(
+        f"w{i}x{j}" for j in range(40))) for i in range(6)]
+    rows.append(("https://blank.example.org/p", "   "))
+    corpus = spark.createDataFrame(rows, "url string, text string")
+    wd = tmp_path / "wd"
+    tables = dedupe_corpus(spark, corpus, str(wd), PARITY_CONFIG)
+
+    def funnel(stage):
+        return json.loads(
+            (wd / "_lineage" / f"{stage}.json").read_text())["funnel"]
+
+    sigs = tables["signatures"]
+    assert funnel("signatures") == {
+        "docs": sigs.count(), "signed": sigs.where("minhash IS NOT NULL")
+        .count()} == {"docs": 7, "signed": 6}
+    assert tables["pairs"].count() == 0
+    assert funnel("pairs") is None
+    assert tables["clusters"].count() == 7
+
+
 def test_metrics_read_merges_grown_schema(spark, tmp_path):
     """A workdir whose metrics table mixes pre-n_capped_buckets files with
     new ones must read back with the full merged schema (plain parquet

@@ -1,7 +1,7 @@
 """Physical-plan discipline tests: the properties that make the engine
 viable at 100 TB are plan shapes, not outputs — filters reach the parquet
-scan, projections prune columns, small sides broadcast, and pair emission
-never degenerates into a cartesian/self-join. These assert on
+scan, projections prune columns, small sides broadcast (the p2 pair
+emission's plan shape is tested in tests/test_lsh.py). These assert on
 .explain-style plan strings so a regression in plan shape fails loudly even
 when results stay correct."""
 
@@ -42,22 +42,6 @@ def test_projection_prunes_scan_columns(spark):
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema, plan
     assert "lang" not in read_schema[0] and "source" not in read_schema[0]
-
-
-def test_candidate_pairs_plan_has_no_join_explosion(spark, sigs):
-    from dedup.lsh import candidate_pairs
-    plan = _plan(candidate_pairs(sigs, PARITY_CONFIG))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # only the broadcast hot-key join
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
-def test_hot_key_join_is_broadcast_hash(spark, sigs):
-    # null-safe equality keys must still plan as a broadcast HASH join,
-    # not a nested-loop
-    from dedup.lsh import candidate_pairs
-    plan = _plan(candidate_pairs(sigs, PARITY_CONFIG))
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_verify_joins_arrays_back_by_key_not_through_banding(spark, sigs):
